@@ -25,11 +25,17 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * Serving reads go through `store.lookupRows(prefix)` — a
   * point-in-time read per request with the store as the consistency
   * boundary (micro-batch upserts are atomic per key). For the
-  * partitioned parquet store that is a PRUNED scan (gran/pday
-  * partition predicates derived from the prefix), the reference's
-  * O(1)-per-key Redis read re-expressed as partition pruning.
+  * partitioned parquet store that is a direct read, on the request
+  * thread and without a Spark job, of only the gran/pday partition
+  * files the prefix can match: the reference's O(1)-per-key Redis read
+  * re-expressed as partition pruning.
+  *
+  * A failed read answers 500 with `{"error": "internal error",
+  * "request_id": n}` and logs the exception under the same id; the
+  * exception text (store paths, class names) never reaches the client.
   */
 object HttpServing {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def jsonNum(d: Double): String =
     if (d.isNaN || d.isInfinite) "null" // JSON has no NaN/Infinity
@@ -65,8 +71,10 @@ object HttpServing {
     */
   def start(store: ServingStore, port: Int = 0): (HttpServer, Int) = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val requests = new java.util.concurrent.atomic.AtomicLong(0)
     server.createContext("/stats/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
+        val id = requests.incrementAndGet()
         val (status, resp) =
           try {
             val prefix = ex.getRequestURI.getPath.stripPrefix("/stats/")
@@ -76,7 +84,9 @@ object HttpServing {
               if (query.split('&').contains("agg=sum")) aggJson(rows)
               else listJson(rows))
           } catch {
-            case e: Exception => (500, s"""{"error": "${esc(e.toString)}"}""")
+            case e: Exception =>
+              log.error(s"request $id (${ex.getRequestURI}) failed", e)
+              (500, s"""{"error": "internal error", "request_id": $id}""")
           }
         val bytes = resp.getBytes(StandardCharsets.UTF_8)
         ex.getResponseHeaders.set("Content-Type", "application/json")

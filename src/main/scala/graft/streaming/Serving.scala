@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
@@ -42,8 +43,9 @@ trait ServingStore {
 
   /** Serving-read path for one key prefix (what [[HttpServing]]
     * routes). Default = filter the snapshot (fine for in-memory
-    * stores); durable stores override with a pruned scan so a point
-    * lookup never pays a full-store read.
+    * stores); durable stores override with a pruned read of only the
+    * partitions the prefix can match, so a point lookup never pays a
+    * full-store read.
     */
   def lookupRows(keyPrefix: String): Seq[ServingStore.CounterRow] =
     snapshot().filter(_.key.startsWith(keyPrefix))
@@ -150,10 +152,15 @@ object InMemoryServingStore {
   * skip inside the day.
   *
   * The payoff is the reference's O(1)-per-key read analog at all four
-  * granularities: [[lookup]] turns a key prefix into gran/pday
-  * partition predicates, so `GET /stats/click/hour/2024-01-05-13`
-  * plans a scan of one day directory per batch — `PartitionFilters`
-  * in the plan, asserted by ScaleSpec — instead of a full-store scan.
+  * granularities: a key prefix pins gran/pday partitions
+  * ([[ParquetServingStore.partitionsOf]]), so
+  * `GET /stats/click/hour/2024-01-05-13` touches one day directory per
+  * batch instead of the whole store. [[lookupRows]], the serving path,
+  * reads those directories' parquet files directly on the calling
+  * thread — no Spark job, so a request neither pays job planning and
+  * scheduling nor queues behind the writer's jobs. [[lookup]] is the
+  * same read as a relational view (`PartitionFilters` in its plan,
+  * asserted by ScaleSpec); ServingLookupSpec pins the two equal.
   */
 final class ParquetServingStore(spark: SparkSession, path: String) extends ServingStore {
   import ParquetServingStore.GRANS
@@ -270,25 +277,23 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
   private def batchIdOf(dir: String): Long =
     dir.substring(dir.lastIndexOf("batch_id=") + "batch_id=".length).toLong
 
-  private def hasParquet(dir: String): Boolean = {
-    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try w.anyMatch(f => f.getFileName.toString.endsWith(".parquet"))
-    finally w.close()
-  }
+  /** False also for a dir deleted during the walk (a sweep or replay
+    * racing the listing): it is absent, not an error.
+    */
+  private def hasParquet(dir: String): Boolean =
+    try {
+      val w = Files.walk(Paths.get(dir))
+      try w.anyMatch(f => f.getFileName.toString.endsWith(".parquet"))
+      finally w.close()
+    } catch {
+      case e: Exception if ParquetServingStore.vanished(e) => false
+    }
 
   private def listRoot(prefix: String): Seq[String] = {
-    val root = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(root)) Seq.empty
-    else {
-      val s = java.nio.file.Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(_.getFileName.toString.startsWith(prefix))
-          .filter(p => java.nio.file.Files.exists(p.resolve("_SUCCESS")))
-          .map(_.toString).toSeq.sorted
-      } finally s.close()
-    }
+    val root = Paths.get(path)
+    if (!Files.exists(root)) Seq.empty
+    else ParquetServingStore.children(root, prefix)
+      .filter(p => Files.exists(p.resolve("_SUCCESS"))).map(_.toString)
   }
 
   /** Batch dirs that are COMMITTED (_SUCCESS marker — Spark's
@@ -298,14 +303,15 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
     * yet FOLDED into a base (a `.folded` marker is compaction's
     * deferred-deletion grace: the dir's content is already in the
     * base, so new reads skip it, while a reader holding an older
-    * listing still finds its files on disk — see [[compact]]).
+    * listing still finds its files on disk — see [[compact]]). The
+    * marker is checked FIRST: a folded dir is what a concurrent sweep
+    * deletes, so it is never walked.
     */
   private def committedBatchDirs: Seq[String] =
-    listRoot("batch_id=").filter(hasParquet).filterNot(isFolded)
+    listRoot("batch_id=").filterNot(isFolded).filter(hasParquet)
 
   private def isFolded(dir: String): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir).resolve(ParquetServingStore.FoldedMarker))
+    Files.exists(Paths.get(dir).resolve(ParquetServingStore.FoldedMarker))
 
   /** The highest committed `base_v<k>` dir — compaction's output
     * namespace, deliberately OUTSIDE the batch-id space so no stream
@@ -330,26 +336,18 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
     latestWhere(None, beforeBatchId = Some(batchId))
 
   /** The reference's HTTP read path (`GET /:account/:type/:year...`)
-    * as partition pruning: the prefix's granularity segment pins
-    * `gran=`, and its (possibly partial) bucket prefix becomes a
-    * `pday` constraint — `StartsWith` on a partition column still
-    * prunes. The exact `key startsWith` filter then applies within the
-    * surviving day directory. A prefix without a granularity segment
-    * (e.g. `click/`) falls back to the unpruned scan, still pushed to
+    * as a relational view: the prefix's partitions
+    * ([[ParquetServingStore.partitionsOf]]) become gran/pday partition
+    * predicates — `StartsWith` on a partition column still prunes —
+    * and the exact `key startsWith` filter applies within the surviving
+    * directories. A prefix without a granularity segment (e.g.
+    * `click/`) falls back to the unpruned scan, still pushed to
     * parquet row-group stats.
     */
   def lookup(keyPrefix: String): DataFrame = {
-    val segs = keyPrefix.split("/", -1).toSeq
-    val pred = segs.zipWithIndex.collectFirst {
-      case (g, i) if GRANS.contains(g) =>
-        val base = col("gran") === g
-        val bucketPrefix = segs.drop(i + 1).mkString("/")
-        if (bucketPrefix.isEmpty) base
-        else if (g == "hour")
-          base && col("pday").startsWith(bucketPrefix.take(10))
-        else if (g == "day")
-          base && col("pday").startsWith(bucketPrefix.take(7))
-        else base && col("pday") === "ALL"
+    val pred = ParquetServingStore.partitionsOf(keyPrefix).map { p =>
+      val gran = col("gran") === p.gran
+      if (p.pdayPrefix.isEmpty) gran else gran && col("pday").startsWith(p.pdayPrefix)
     }
     // n=0 TOMBSTONES (a maintenance retraction, see JoinView) read as
     // deleted on the SERVING path — a dashboard must not render a
@@ -359,13 +357,51 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
       .filter(col("nEvents") =!= 0)
   }
 
-  /** Serving-path rows for one prefix (the [[HttpServing]] contract):
-    * collect the pruned lookup, never the whole store.
+  /** Serving-path rows for one prefix (the [[HttpServing]] contract),
+    * read without Spark: the same committed dirs and partitions as
+    * [[lookup]], each `part-*.parquet` file read with parquet-hadoop
+    * under the key range `[prefix, prefix ++ 0xFF)` (row-group and page
+    * stats skip what lies outside it), latest batch winning per key and
+    * n=0 tombstones dropped. Sorted by key.
+    *
+    * A compaction sweep or a batch replay can delete a dir between the
+    * listing and the read; the read then lists again, once.
     */
-  override def lookupRows(keyPrefix: String): Seq[ServingStore.CounterRow] = {
-    import spark.implicits._
-    if (!hasData) Seq.empty
-    else lookup(keyPrefix).as[ServingStore.CounterRow].collect().toSeq
+  override def lookupRows(keyPrefix: String): Seq[ServingStore.CounterRow] =
+    try readPrefix(keyPrefix)
+    catch { case e: Exception if ParquetServingStore.vanished(e) => readPrefix(keyPrefix) }
+
+  private def readPrefix(keyPrefix: String): Seq[ServingStore.CounterRow] = {
+    val parts = ParquetServingStore.partitionsOf(keyPrefix)
+    // batches are listed BEFORE the base, as in latestWhere: a compaction
+    // between the two listings then yields its new base plus dominated
+    // batch dirs (read identically), never an old base missing the
+    // batches it just folded
+    val batches = committedBatchDirs.sortBy(batchIdOf)
+    val latest = new java.util.HashMap[String, ServingStore.CounterRow]()
+    // the base ranks below every batch and batches apply in id order, so
+    // a plain overwrite leaves each key at its latest batch (max_by)
+    for (dir <- committedBaseDir.toSeq ++ batches; file <- partFiles(dir, parts))
+      ParquetServingStore.readRange(file, keyPrefix)(r => latest.put(r.key, r))
+    latest.values.asScala.filter(_.nEvents != 0).toSeq.sortBy(_.key)
+  }
+
+  /** The `part-*.parquet` files of one batch or base dir inside the
+    * partitions `parts` admits (all of them when None).
+    */
+  private def partFiles(dir: String,
+      parts: Option[ParquetServingStore.Partitions]): Seq[Path] = {
+    import ParquetServingStore.children
+    val root = Paths.get(dir)
+    // listing (not probing) the dir makes a vanished one throw
+    val granDirs = children(root, "gran=")
+      .filter(g => parts.forall(g.getFileName.toString == "gran=" + _.gran))
+    for {
+      g <- granDirs
+      d <- children(g, "pday=")
+      if parts.forall(_.admitsPday(d.getFileName.toString.stripPrefix("pday=")))
+      f <- children(d, "part-") if f.getFileName.toString.endsWith(".parquet")
+    } yield f
   }
 
   private def hasData: Boolean =
@@ -380,10 +416,12 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
   /** Compaction + retention (round 15, VERDICT r14 #3): a long-running
     * stream accumulates one `batch_id=` subtree per micro-batch
     * forever — the store grows without bound and every read's
-    * latest-batch-wins merge pays the accumulated dir count
-    * (tools/ServeCompactProf: lookup 0.16 s at 10 batches → 1.6 s at
-    * 200). This folds all but the newest `retainBatches` deltas (plus
-    * the current base) into the next VERSIONED BASE `base_v<k+1>`,
+    * latest-batch-wins merge pays the accumulated dir count (lookup
+    * 0.27 s at 10 batches → 0.58 s at 200, SCALING.md §"Round-15:
+    * serving-store compaction", measured by a tool last present at
+    * commit 0549e1c). This folds all but the newest `retainBatches`
+    * deltas (plus the current base) into the next VERSIONED BASE
+    * `base_v<k+1>`,
     * holding each key's resolved value:
     *
     *  - the base lives OUTSIDE the batch-id namespace and reads as
@@ -426,7 +464,7 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
     *    compact() sweeps previously-marked dirs, superseded bases,
     *    and dominated empty batch dirs — so a read racing the
     *    maintenance pass never hits a vanished file unless it spans
-    *    a full compaction cycle.
+    *    a full compaction cycle (and [[lookupRows]] then lists again).
     *
     * Single-writer discipline (documented, not enforced): one
     * maintenance writer at a time, like every base+delta store
@@ -464,8 +502,8 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
       .repartition(col("gran"), col("pday"))
       .write.partitionBy("gran", "pday")
       .mode("overwrite").parquet(s"$path/base_v$nextV")
-    toCompact.foreach(d => java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(d).resolve(ParquetServingStore.FoldedMarker)))
+    toCompact.foreach(d => Files.createFile(
+      Paths.get(d).resolve(ParquetServingStore.FoldedMarker)))
   }
 
   /** The deferred-deletion sweep (see [[compact]]): remove batch dirs
@@ -508,6 +546,82 @@ object ParquetServingStore {
   val MaintenanceIdBase: Long = 1L << 62
 
   private[streaming] val FoldedMarker = "_FOLDED"
+
+  /** The partition dirs a key prefix can match: `gran=<gran>` and the
+    * `pday=` values starting with `pdayPrefix` ("" admits every pday).
+    */
+  private[streaming] final case class Partitions(gran: String, pdayPrefix: String) {
+    def admitsPday(dirValue: String): Boolean =
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(dirValue).startsWith(pdayPrefix)
+  }
+
+  /** Prefix → partitions, the ONE pruning decision both [[lookup]] and
+    * [[lookupRows]] use: the prefix's first granularity segment pins
+    * `gran=`, and the (possibly partial) bucket after it constrains
+    * `pday` for hour keys (pday = the bucket's day) and day keys (its
+    * month); month/year keys all live in `pday=ALL`. None when the
+    * prefix has no granularity segment — every partition is read.
+    */
+  private[streaming] def partitionsOf(keyPrefix: String): Option[Partitions] = {
+    val segs = keyPrefix.split("/", -1).toSeq
+    segs.zipWithIndex.collectFirst {
+      case (g, i) if GRANS.contains(g) =>
+        val bucketPrefix = segs.drop(i + 1).mkString("/")
+        Partitions(g, g match {
+          case "hour" => bucketPrefix.take(10)
+          case "day" => bucketPrefix.take(7)
+          case _ => ""
+        })
+    }
+  }
+
+  /** Entries of `dir` whose names start with `prefix`, sorted. */
+  private def children(dir: Path, prefix: String): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix))
+      .toSeq.sorted
+    finally s.close()
+  }
+
+  /** Feed `f` every row of one store file whose key starts with
+    * `keyPrefix`. The range filter `[prefix, prefix ++ 0xFF)` is exact
+    * (UTF-8 never contains the byte 0xFF) and lets parquet skip row
+    * groups and pages by their key stats.
+    */
+  private def readRange(file: Path, keyPrefix: String)(
+      f: ServingStore.CounterRow => Unit): Unit = {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.io.api.Binary
+    val lo = keyPrefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val key = FilterApi.binaryColumn("key")
+    val range = FilterApi.and(
+      FilterApi.gtEq(key, Binary.fromConstantByteArray(lo)),
+      FilterApi.lt(key, Binary.fromConstantByteArray(lo :+ 0xFF.toByte)))
+    val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
+        new org.apache.parquet.io.LocalInputFile(file),
+        new org.apache.parquet.conf.PlainParquetConfiguration()) {
+      override protected def getReadSupport =
+        new org.apache.parquet.hadoop.example.GroupReadSupport
+    }.withFilter(FilterCompat.get(range)).build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).foreach { g =>
+      // a null sum (every summed value was null) reads as NaN, which
+      // HttpServing renders as JSON null
+      f(ServingStore.CounterRow(g.getString("key", 0), g.getLong("nEvents", 0),
+        if (g.getFieldRepetitionCount("sumValue") == 0) Double.NaN
+        else g.getDouble("sumValue", 0)))
+    }
+    finally reader.close()
+  }
+
+  /** True when `e` (or a cause) is a file or dir that disappeared. */
+  private[streaming] def vanished(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException => true
+      case _ => false
+    }
 }
 
 object Serving {

@@ -53,4 +53,26 @@ class HttpServingSpec extends SparkSpec {
       assert(agg.contains(s""""n_events": $expected,"""), s"$agg vs $expected")
     } finally server.stop(0)
   }
+
+  test("a failed read answers 500 with a request id and no exception text") {
+    val store = new ServingStore {
+      def merge(batchId: Long, rows: Seq[ServingStore.CounterRow]): Unit = ()
+      def sinkBatch(keyed: org.apache.spark.sql.DataFrame, batchId: Long): Unit = ()
+      def snapshot(): Seq[ServingStore.CounterRow] = Nil
+      override def lookupRows(keyPrefix: String): Seq[ServingStore.CounterRow] =
+        throw new java.nio.file.NoSuchFileException("/srv/store/batch_id=2/_SUCCESS")
+    }
+    val (server, port) = HttpServing.start(store)
+    try {
+      val conn = java.net.URI.create(s"http://127.0.0.1:$port/stats/click/").toURL
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      val (status, body) =
+        try (conn.getResponseCode,
+          scala.io.Source.fromInputStream(conn.getErrorStream, "UTF-8").mkString)
+        finally conn.disconnect()
+      assert(status == 500)
+      assert(body == """{"error": "internal error", "request_id": 1}""", body)
+      assert(!body.contains("batch_id") && !body.contains("NoSuchFile"), body)
+    } finally server.stop(0)
+  }
 }

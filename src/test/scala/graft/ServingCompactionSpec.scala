@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * idempotence — including a replay of a batch compaction already
   * FOLDED — and crash-window convergence (dominated dirs left behind
   * by an interrupted pass read identically and a re-run removes
-  * them). The latency side is measured by tools/ServeCompactProf →
-  * SCALING.md.
+  * them). The latency side is in SCALING.md §"Round-15: serving-store
+  * compaction" (measured by a tool last present at commit 0549e1c).
   */
 class ServingCompactionSpec extends SparkSpec {
 

@@ -1,0 +1,154 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import scala.jdk.CollectionConverters._
+
+import graft.streaming.{ParquetServingStore, ServingStore}
+
+/** The serving read `ParquetServingStore.lookupRows` (a direct parquet
+  * read, no Spark job) against the relational `lookup` it must equal,
+  * over every store shape compaction, replay and maintenance produce,
+  * and under a concurrent writer whose compaction sweeps delete dirs
+  * while reads list them.
+  */
+class ServingLookupSpec extends SparkSpec {
+  import ServingStore.CounterRow
+
+  private def row(k: String, n: Long, v: Double) = CounterRow(k, n, v)
+
+  private val prefixes = Seq(
+    "click/hour/2024-01-05-13", "click/hour/2024-01-05", "click/hour/",
+    "click/day/2024-01-05", "click/day/2024-01", "click/month/2024-01",
+    "click/year/2024", "user/7/", "user/7/click/day/2024-01", "user/7",
+    "click/day", "click/", "misc", "", "nope/")
+
+  /** lookupRows(p) equals lookup(p).collect() as sets, with no key twice;
+    * returns how many prefixes answered non-empty.
+    */
+  private def assertSameAsLookup(store: ParquetServingStore): Int = {
+    import spark.implicits._
+    prefixes.count { p =>
+      val want = store.lookup(p).as[CounterRow].collect().toSet
+      val got = store.lookupRows(p)
+      assert(got.toSet == want, s"prefix '$p'")
+      assert(got.map(_.key).distinct.size == got.size, s"prefix '$p': a key twice")
+      got.nonEmpty
+    }
+  }
+
+  test("lookupRows equals lookup on an empty store and on a compacted " +
+      "store with replays, tombstones, maintenance and empty batches") {
+    assert(assertSameAsLookup(
+      new ParquetServingStore(spark, SparkEnv.scratchDir("lookup-empty"))) == 0)
+
+    val dir = SparkEnv.scratchDir("lookup-diff")
+    val store = new ParquetServingStore(spark, dir)
+    def batch(b: Int) = Seq(
+      row("click/hour/2024-01-05-13", 1 + b, 0.5 * b),
+      row(s"click/hour/2024-01-0${b + 5}-02", 2 + b, 1.0),
+      row("click/day/2024-01-05", 10 + b, 2.0 * b),
+      row(s"click/day/2024-02-0${b + 1}", 3, 0.25),
+      row("click/month/2024-01", 20 + b, 3.0),
+      row("click/year/2024", 30 + b, 4.0),
+      row(s"user/7/click/day/2024-01-0${b + 1}", 1 + b, 1.5),
+      row("user/70/click/day/2024-01-06", 5 + b, 2.5),
+      row("misc/thing", 7 + b, 0.0), // no granularity: gran=NONE
+      row("misc", 1 + b, 9.0)) // no '/' at all: gran=NONE
+    (0 until 4).foreach(b => store.merge(b, batch(b)))
+    store.compact(retainBatches = 1) // base_v1 = batches 0-2, batch 3 live
+    // recovery replay of a batch the base already folded
+    store.merge(2, batch(2))
+    // an n=0 tombstone and a maintenance-space batch
+    store.merge(4, Seq(row("click/day/2024-01-05", 0, 0.0)))
+    store.merge(ParquetServingStore.MaintenanceIdBase, Seq(
+      row("click/month/2024-01", 99, 9.5), row("user/7/click/day/2024-01-09", 3, 1.0)))
+    // a committed zero-row micro-batch
+    import spark.implicits._
+    store.sinkBatch(Seq.empty[(String, Long, Double)].toDF("key", "n_events", "sum_value"), 5)
+    assert(new java.io.File(dir, "batch_id=5/_SUCCESS").exists())
+    assert(new java.io.File(dir, "base_v1/_SUCCESS").exists())
+    assert(store.batchDirCount == 4, "batches 2, 3, 4 and maintenance are live")
+    assert(assertSameAsLookup(store) >= 12)
+    assert(store.lookupRows("click/day/2024-01-05").isEmpty, "tombstone must hide the key")
+    assert(store.lookupRows("click/month/2024-01").map(_.nEvents) == Seq(99L))
+
+    // a second cycle sweeps the folded dirs and folds 2-4 into base_v2
+    store.compact(retainBatches = 0)
+    assert(assertSameAsLookup(store) >= 12)
+  }
+
+  test("lookupRows equals lookup on seeded random stores") {
+    for (seed <- 1 to 2) {
+      val rng = new scala.util.Random(seed)
+      def r(n: Int) = rng.nextInt(n)
+      val store = new ParquetServingStore(spark, SparkEnv.scratchDir(s"lookup-rand-$seed"))
+      // buckets around the probed prefixes, so most prefixes hit keys
+      def key(): String = {
+        val head = if (rng.nextBoolean()) "click" else s"user/${r(12)}/click"
+        head + (r(4) match {
+          case 0 => s"/hour/2024-01-0${4 + r(3)}-1${2 + r(3)}"
+          case 1 => s"/day/2024-0${1 + r(2)}-0${4 + r(3)}"
+          case 2 => s"/month/2024-0${1 + r(3)}"
+          case _ => s"/year/202${3 + r(3)}"
+        })
+      }
+      for (b <- 0 until 8) {
+        val rows = Seq.fill(6)(key()).distinct
+          .map(k => row(k, if (r(5) == 0) 0 else r(50) + 1, r(9) * 0.5))
+        store.merge(b, rows)
+        if (b % 3 == 2) store.compact(retainBatches = r(2))
+      }
+      assert(assertSameAsLookup(store) >= 6, s"seed $seed")
+    }
+  }
+
+  test("lookupRows racing merges and compaction sweeps never fails and " +
+      "always answers a committed state") {
+    val store = new ParquetServingStore(spark, SparkEnv.scratchDir("lookup-race"))
+    val keys = (0 until 6).map(i => s"click/hour/2024-01-0${i % 3 + 1}-1$i") :+
+      "click/day/2024-01-02"
+    val batches = 16
+    // half the keys per batch; batch 7 retracts key 1 with a tombstone
+    def rowsOf(b: Int): Seq[CounterRow] = keys.zipWithIndex
+      .filter { case (_, i) => (i + b) % 2 == 0 }
+      .map { case (k, i) => row(k, if (b == 7 && i == 1) 0L else b * 10L + i + 1, b + i * 0.5) }
+    // states(c) = the served content once batches 0 until c committed
+    val states = (0 until batches).scanLeft(Map.empty[String, CounterRow]) { (m, b) =>
+      m ++ rowsOf(b).map(r => r.key -> r)
+    }.map(_.values.filter(_.nEvents != 0).toSet)
+    // one reader thread per prefix
+    val readPrefixes = Seq("click/", "click/hour/2024-01-02", "click/day/")
+
+    val started = new AtomicInteger(0)
+    val committed = new AtomicInteger(0)
+    val done = new AtomicBoolean(false)
+    val reads = new AtomicInteger(0)
+    val failures = new ConcurrentLinkedQueue[String]()
+    val readers = readPrefixes.map(p => new Thread(() => while (!done.get) {
+      val lo = committed.get
+      try {
+        val got = store.lookupRows(p).toSet
+        val hi = started.get
+        if (!(lo to hi).exists(c => states(c).filter(_.key.startsWith(p)) == got))
+          failures.add(s"'$p' read between batches $lo and $hi: $got")
+      } catch { case e: Exception => failures.add(s"'$p': $e") }
+      reads.incrementAndGet()
+    }))
+    readers.foreach(_.start())
+    // compacting every other batch sweeps folded dirs every cycle
+    try for (b <- 0 until batches) {
+      started.set(b + 1)
+      store.merge(b, rowsOf(b))
+      committed.set(b + 1)
+      if (b % 2 == 1) store.compact(retainBatches = 1)
+    } finally {
+      done.set(true)
+      readers.foreach(_.join())
+    }
+    assert(failures.isEmpty, failures.asScala.take(5).mkString("\n"))
+    assert(reads.get > batches, s"only ${reads.get} reads raced the writer")
+    assert(store.lookupRows("click/").toSet == states(batches))
+  }
+}
