@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Session plumbing shared by the driver-facing mains and tests.
   *
@@ -148,7 +149,8 @@ object SparkEnv {
     * and Importance each carried a copy, and Importance's weaker one
     * let an IO exception fail the query over a best-effort cleanup):
     * Files.walk with the stream CLOSED in finally (it holds open dir
-    * handles) and a catch-all — cleanup never outranks the query.
+    * handles), swallowing any non-fatal error — cleanup never outranks
+    * the query.
     */
   private[graft] def deleteDir(path: String): Unit =
     try {
@@ -157,7 +159,7 @@ object SparkEnv {
       try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
         .foreach(java.nio.file.Files.deleteIfExists(_))
       finally walk.close() // walk holds open dir handles
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
   def scratchDir(prefix: String): String = {
     val dir = java.nio.file.Files

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -17,7 +18,14 @@ object Verify {
     // concurrently (Spark schedules concurrent jobs fine; each query's
     // own stages still parallelize across all cores). Streaming-backed
     // queries manage their own checkpoints, so they are safe too.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    // A fatal error (OOM, stack overflow) is not caught below: it kills
+    // its pool thread without completing the query's Future, so it ends
+    // the run instead of leaving the Await below waiting forever.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = new Thread(r)
+      t.setUncaughtExceptionHandler { (_, e) => e.printStackTrace(); sys.exit(1) }
+      t
+    })
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     // Optional trailing args restrict the dump to named queries — a dev
@@ -29,7 +37,7 @@ object Verify {
       scala.concurrent.Future {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           failed.add(name)
           // remove any STALE output from a previous run of a reused

@@ -4,6 +4,7 @@ import graft.{DeclaredQuery, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Near-duplicate detection at scale (SURVEY.md §2 K2; prompt's
   * training-data dedup list): MinHash + banded LSH and SimHash.
@@ -454,7 +455,7 @@ object Dedup {
     }
     var prevCkptPath: Option[org.apache.hadoop.fs.Path] = None
     def dropPrevCkpt(): Unit = prevCkptPath.foreach { p =>
-      try { fs.delete(p, true); () } catch { case _: Throwable => () }
+      try { fs.delete(p, true); () } catch { case NonFatal(_) => () }
     }
     def ckpt(df: DataFrame): DataFrame = checkpointDir match {
       case Some(_) =>

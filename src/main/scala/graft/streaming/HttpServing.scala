@@ -25,10 +25,12 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * Serving reads go through `store.lookupRows(prefix)` — a
   * point-in-time read per request with the store as the consistency
   * boundary (micro-batch upserts are atomic per key). For the
-  * partitioned parquet store that is a direct read, on the request
-  * thread and without a Spark job, of only the gran/pday partition
-  * files the prefix can match: the reference's O(1)-per-key Redis read
-  * re-expressed as partition pruning.
+  * partitioned parquet store that is a read on the request thread,
+  * without a Spark job, of only the gran/pday partition files the
+  * prefix can match, each binary-searched in the store's bounded index
+  * of key-sorted file rows (a file decodes once, on its first read):
+  * the reference's O(1)-per-key Redis read re-expressed as partition
+  * pruning plus a sorted-index probe.
   *
   * A failed read answers 500 with `{"error": "internal error",
   * "request_id": n}` and logs the exception under the same id; the

@@ -156,11 +156,20 @@ object InMemoryServingStore {
   * ([[ParquetServingStore.partitionsOf]]), so
   * `GET /stats/click/hour/2024-01-05-13` touches one day directory per
   * batch instead of the whole store. [[lookupRows]], the serving path,
-  * reads those directories' parquet files directly on the calling
+  * answers from those directories' parquet files on the calling
   * thread — no Spark job, so a request neither pays job planning and
-  * scheduling nor queues behind the writer's jobs. [[lookup]] is the
-  * same read as a relational view (`PartitionFilters` in its plan,
-  * asserted by ScaleSpec); ServingLookupSpec pins the two equal.
+  * scheduling nor queues behind the writer's jobs. Each file is decoded
+  * once into rows sorted by key and kept in a per-store LRU index
+  * bounded to [[ParquetServingStore.IndexBudgetRows]] rows; a lookup
+  * then binary-searches the prefix in every admitted file, so a warm
+  * read costs the listing plus the matching rows, not the file sizes.
+  * Index entries are keyed by (path, size, mtime) and committed store
+  * files are immutable (a replay or compaction writes new
+  * `part-<uuid>` files into a recreated or new dir), so an entry can
+  * never answer for changed content; entries of dirs a read's listing
+  * no longer returns are dropped. [[lookup]] is the same read as a
+  * relational view (`PartitionFilters` in its plan, asserted by
+  * ScaleSpec); ServingLookupSpec pins the two equal.
   */
 final class ParquetServingStore(spark: SparkSession, path: String) extends ServingStore {
   import ParquetServingStore.GRANS
@@ -359,10 +368,11 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
 
   /** Serving-path rows for one prefix (the [[HttpServing]] contract),
     * read without Spark: the same committed dirs and partitions as
-    * [[lookup]], each `part-*.parquet` file read with parquet-hadoop
-    * under the key range `[prefix, prefix ++ 0xFF)` (row-group and page
-    * stats skip what lies outside it), latest batch winning per key and
-    * n=0 tombstones dropped. Sorted by key.
+    * [[lookup]]; in each admitted `part-*.parquet` file the rows whose
+    * key starts with the prefix are found by binary search in the
+    * file's key-sorted rows ([[fileIndex]]: decoded whole on first use,
+    * then kept), latest batch winning per key and n=0 tombstones
+    * dropped. Sorted by key.
     *
     * A compaction sweep or a batch replay can delete a dir between the
     * listing and the read; the read then lists again, once.
@@ -371,6 +381,10 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
     try readPrefix(keyPrefix)
     catch { case e: Exception if ParquetServingStore.vanished(e) => readPrefix(keyPrefix) }
 
+  /** Sorted rows of the store files [[lookupRows]] has read. */
+  private[graft] val fileIndex =
+    new ParquetServingStore.SortedFileCache(ParquetServingStore.IndexBudgetRows)
+
   private def readPrefix(keyPrefix: String): Seq[ServingStore.CounterRow] = {
     val parts = ParquetServingStore.partitionsOf(keyPrefix)
     // batches are listed BEFORE the base, as in latestWhere: a compaction
@@ -378,11 +392,14 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
     // batch dirs (read identically), never an old base missing the
     // batches it just folded
     val batches = committedBatchDirs.sortBy(batchIdOf)
+    val dirs = committedBaseDir.toSeq ++ batches
+    // a dir this listing no longer returns was folded, swept or superseded
+    fileIndex.retainDirs(dirs.toSet)
     val latest = new java.util.HashMap[String, ServingStore.CounterRow]()
     // the base ranks below every batch and batches apply in id order, so
     // a plain overwrite leaves each key at its latest batch (max_by)
-    for (dir <- committedBaseDir.toSeq ++ batches; file <- partFiles(dir, parts))
-      ParquetServingStore.readRange(file, keyPrefix)(r => latest.put(r.key, r))
+    for (dir <- dirs; file <- partFiles(dir, parts))
+      fileIndex.rowsOf(dir, file).foreachWithPrefix(keyPrefix)(r => latest.put(r.key, r))
     latest.values.asScala.filter(_.nEvents != 0).toSeq.sortBy(_.key)
   }
 
@@ -584,36 +601,118 @@ object ParquetServingStore {
     finally s.close()
   }
 
-  /** Feed `f` every row of one store file whose key starts with
-    * `keyPrefix`. The range filter `[prefix, prefix ++ 0xFF)` is exact
-    * (UTF-8 never contains the byte 0xFF) and lets parquet skip row
-    * groups and pages by their key stats.
-    */
-  private def readRange(file: Path, keyPrefix: String)(
-      f: ServingStore.CounterRow => Unit): Unit = {
+  /** Every row of one store file, sorted by key. */
+  private[graft] def decodeSorted(file: Path): SortedRows = {
     import org.apache.parquet.example.data.Group
-    import org.apache.parquet.filter2.compat.FilterCompat
-    import org.apache.parquet.filter2.predicate.FilterApi
-    import org.apache.parquet.io.api.Binary
-    val lo = keyPrefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val key = FilterApi.binaryColumn("key")
-    val range = FilterApi.and(
-      FilterApi.gtEq(key, Binary.fromConstantByteArray(lo)),
-      FilterApi.lt(key, Binary.fromConstantByteArray(lo :+ 0xFF.toByte)))
     val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
         new org.apache.parquet.io.LocalInputFile(file),
         new org.apache.parquet.conf.PlainParquetConfiguration()) {
       override protected def getReadSupport =
         new org.apache.parquet.hadoop.example.GroupReadSupport
-    }.withFilter(FilterCompat.get(range)).build()
-    try Iterator.continually(reader.read()).takeWhile(_ != null).foreach { g =>
-      // a null sum (every summed value was null) reads as NaN, which
-      // HttpServing renders as JSON null
-      f(ServingStore.CounterRow(g.getString("key", 0), g.getLong("nEvents", 0),
-        if (g.getFieldRepetitionCount("sumValue") == 0) Double.NaN
-        else g.getDouble("sumValue", 0)))
+    }.build()
+    val rows =
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+        // a null sum (every summed value was null) reads as NaN, which
+        // HttpServing renders as JSON null
+        ServingStore.CounterRow(g.getString("key", 0), g.getLong("nEvents", 0),
+          if (g.getFieldRepetitionCount("sumValue") == 0) Double.NaN
+          else g.getDouble("sumValue", 0))
+      }.toArray
+      finally reader.close()
+    SortedRows(rows)
+  }
+
+  /** One store file's rows as parallel arrays sorted by key. */
+  private[graft] final class SortedRows private (keys: Array[String],
+      nEvents: Array[Long], sumValues: Array[Double]) {
+    def size: Int = keys.length
+
+    /** Feed `f` every row whose key starts with `prefix`, in key order.
+      * Those keys are one contiguous run starting at the first key not
+      * below `prefix`.
+      */
+    def foreachWithPrefix(prefix: String)(f: ServingStore.CounterRow => Unit): Unit = {
+      var i = scala.collection.immutable.ArraySeq.unsafeWrapArray(keys)
+        .search(prefix).insertionPoint
+      while (i < keys.length && keys(i).startsWith(prefix)) {
+        f(ServingStore.CounterRow(keys(i), nEvents(i), sumValues(i)))
+        i += 1
+      }
     }
-    finally reader.close()
+  }
+
+  private[graft] object SortedRows {
+    def apply(rows: Array[ServingStore.CounterRow]): SortedRows = {
+      val sorted = rows.sortBy(_.key)
+      new SortedRows(sorted.map(_.key), sorted.map(_.nEvents), sorted.map(_.sumValue))
+    }
+  }
+
+  /** Row budget of one store's [[SortedFileCache]]: about 50 MB of heap
+    * at ~100 bytes a cached row (a 30-character key, its counters and
+    * the array slots).
+    */
+  private[streaming] val IndexBudgetRows: Int = 500000
+
+  /** Key-sorted rows of immutable store files, LRU-bounded to
+    * `budgetRows` rows in total. An entry is keyed by the file's path,
+    * size and mtime, and a committed store file is never rewritten in
+    * place: a replay or a compaction writes new `part-<uuid>` files
+    * into a recreated or new dir. So an entry cannot go stale; at worst
+    * it stays unused until LRU eviction or [[retainDirs]] drops it.
+    *
+    * Files decode outside the lock (two readers that miss the same file
+    * both decode it); only the map updates hold it. A file with more
+    * rows than the budget is decoded for each read and never kept.
+    */
+  private[graft] final class SortedFileCache(budgetRows: Int,
+      decode: Path => SortedRows = decodeSorted) {
+    import SortedFileCache.{Entry, FileId}
+
+    // access-ordered: iteration starts at the least recently used entry
+    private val entries = new java.util.LinkedHashMap[FileId, Entry](16, 0.75f, true)
+    private var cachedRows = 0L
+
+    /** The sorted rows of `file`, a file inside the store dir `dir`. */
+    def rowsOf(dir: String, file: Path): SortedRows = {
+      val attrs = Files.readAttributes(file,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      val id = FileId(file.toString, attrs.size, attrs.lastModifiedTime)
+      Option(synchronized(entries.get(id))).map(_.rows).getOrElse {
+        val decoded = decode(file)
+        if (decoded.size <= budgetRows) synchronized {
+          Option(entries.put(id, Entry(dir, decoded))).foreach(old => cachedRows -= old.rows.size)
+          cachedRows += decoded.size
+          val lru = entries.values.iterator
+          while (cachedRows > budgetRows) {
+            cachedRows -= lru.next().rows.size
+            lru.remove()
+          }
+        }
+        decoded
+      }
+    }
+
+    /** Drop every entry whose dir is not in `live`. */
+    def retainDirs(live: Set[String]): Unit = synchronized {
+      val it = entries.values.iterator
+      while (it.hasNext) {
+        val e = it.next()
+        if (!live(e.dir)) { cachedRows -= e.rows.size; it.remove() }
+      }
+    }
+
+    def rows: Long = synchronized(cachedRows)
+
+    /** Cached files, least recently used first. */
+    def files: Seq[String] = synchronized(entries.keySet.asScala.toList.map(_.path))
+
+    def dirs: Set[String] = synchronized(entries.values.asScala.map(_.dir).toSet)
+  }
+
+  private object SortedFileCache {
+    final case class FileId(path: String, size: Long, mtime: java.nio.file.attribute.FileTime)
+    final case class Entry(dir: String, rows: SortedRows)
   }
 
   /** True when `e` (or a cause) is a file or dir that disappeared. */
@@ -749,7 +848,9 @@ object Serving {
       // wants bounded-lateness eviction uses hourlyCounters'
       // watermarked shape. Mechanically this also removes the
       // watermark-advance no-data micro-batch, ~0.5 s of the measured
-      // replay (AcctPhaseProf: batch 1, 0 rows, 514 ms warm).
+      // replay (batch 1, 0 rows, 514 ms warm; SCALING.md round 12). The
+      // per-batch phases are printed by `perfbench/run.py --workload
+      // ingest --trace 1` followed by `perfbench/census.py`.
       //
       // date_trunc, not window(): with no watermark the window()
       // struct had no eviction role left, and a calendar day is a
@@ -850,39 +951,6 @@ object Serving {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    store
-  }
-
-  /** Alternative shape kept for the concurrent-queries surface (tested
-    * in ScalaTest): four independent streaming aggregations, one per
-    * granularity, each with its own state and checkpoint, upserting
-    * into one store. Scales each granularity independently but scans
-    * the source four times.
-    */
-  def runMultiGranularityPipeline(spark: SparkSession, sfDir: String,
-      store: ServingStore, checkpointRoot: String): ServingStore = {
-    val formats = Seq(
-      "hour" -> "yyyy-MM-dd-HH", "day" -> "yyyy-MM-dd",
-      "month" -> "yyyy-MM", "year" -> "yyyy")
-    val queries = formats.map { case (gran, fmt) =>
-      val agg = Ingest.eventStream(spark, sfDir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(date_trunc(gran, col("ts")).as("bucket"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", s"$checkpointRoot/$gran")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          store.sinkBatch(batch.select(
-            concat_ws("/", col("event_type"), lit(gran),
-              date_format(col("bucket"), fmt)).as("key"),
-            col("n_events"), col("sum_value")), batchId)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    queries.foreach(_.awaitTermination())
     store
   }
 }

@@ -3,6 +3,8 @@ package org.apache.spark.sql.execution.streaming.checkpointing
 import java.io.BufferedOutputStream
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, LocalFileSystem, Path, RawLocalFileSystem}
 
@@ -61,7 +63,7 @@ class GraftLocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     try {
       val fs = path.getFileSystem(hadoopConf)
       fs.isInstanceOf[LocalFileSystem] || fs.isInstanceOf[RawLocalFileSystem]
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
 
   private def nio(p: Path): java.nio.file.Path = Paths.get(p.toUri.getPath)
 

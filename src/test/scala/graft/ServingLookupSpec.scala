@@ -11,7 +11,9 @@ import graft.streaming.{ParquetServingStore, ServingStore}
   * read, no Spark job) against the relational `lookup` it must equal,
   * over every store shape compaction, replay and maintenance produce,
   * and under a concurrent writer whose compaction sweeps delete dirs
-  * while reads list them.
+  * while reads list them; and the store's index of sorted file rows
+  * (`SortedFileCache`) on its own: warm across replays and compactions,
+  * rid of dirs they retire, and within its row budget.
   */
 class ServingLookupSpec extends SparkSpec {
   import ServingStore.CounterRow
@@ -150,5 +152,113 @@ class ServingLookupSpec extends SparkSpec {
     assert(failures.isEmpty, failures.asScala.take(5).mkString("\n"))
     assert(reads.get > batches, s"only ${reads.get} reads raced the writer")
     assert(store.lookupRows("click/").toSet == states(batches))
+  }
+
+  test("a warm index stays equal to lookup across a replay with different " +
+      "rows and a compaction") {
+    val store = new ParquetServingStore(spark, SparkEnv.scratchDir("lookup-warm"))
+    def batch(b: Int, n: Long) = Seq(
+      row("click/hour/2024-01-05-13", n + b, 0.5 * b),
+      row(s"click/day/2024-01-0${b + 1}", n, 1.0),
+      row("click/month/2024-01", n + 10 * b, 3.0),
+      row(s"user/7/click/day/2024-01-0${b + 1}", n + 1, 1.5))
+    (0 until 4).foreach(b => store.merge(b, batch(b, 1)))
+    assert(assertSameAsLookup(store) >= 10)
+    val warm = store.fileIndex.files.toSet
+    assert(warm.nonEmpty)
+    // replay batch 3 with new counts and without its user/7 key
+    store.merge(3, batch(3, 50).take(3))
+    assert(assertSameAsLookup(store) >= 10)
+    assert(store.lookupRows("click/month/2024-01").map(_.nEvents) == Seq(80L))
+    assert(store.lookupRows("user/7/click/day/2024-01-04").isEmpty)
+    assert(warm.subsetOf(store.fileIndex.files.toSet), "batches 0-2 stay cached")
+    store.compact(retainBatches = 1)
+    assert(assertSameAsLookup(store) >= 10)
+    // replay a folded batch with different rows, then sweep it
+    store.merge(1, batch(1, 70))
+    assert(assertSameAsLookup(store) >= 10)
+    store.compact(retainBatches = 0)
+    assert(assertSameAsLookup(store) >= 10)
+  }
+
+  test("after a compaction sweep the index holds only dirs the listing returns") {
+    val dir = SparkEnv.scratchDir("lookup-retain")
+    val store = new ParquetServingStore(spark, dir)
+    def sub(name: String) = java.nio.file.Paths.get(dir).resolve(name).toString
+    def rows(b: Int) = Seq(row(s"click/hour/2024-01-05-1$b", 1 + b, 1.0),
+      row(s"click/day/2024-01-0${b + 1}", 2 + b, 2.0))
+    (0 until 4).foreach(b => store.merge(b, rows(b)))
+    prefixes.foreach(store.lookupRows)
+    assert(store.fileIndex.dirs == (0 until 4).map(b => sub(s"batch_id=$b")).toSet)
+    // folds 0-2 into base_v1 and marks them; the next read drops them
+    store.compact(retainBatches = 1)
+    store.lookupRows("click/day/")
+    assert(store.fileIndex.dirs.subsetOf(Set(sub("base_v1"), sub("batch_id=3"))))
+    prefixes.foreach(store.lookupRows)
+    assert(store.fileIndex.dirs == Set(sub("base_v1"), sub("batch_id=3")))
+    // sweeps 0-2, folds 3 into base_v2 (base_v1 superseded)
+    store.merge(4, rows(4))
+    store.compact(retainBatches = 1)
+    prefixes.foreach(store.lookupRows)
+    assert(store.fileIndex.dirs == Set(sub("base_v2"), sub("batch_id=4")))
+    assert((0 until 3).forall(b => !new java.io.File(sub(s"batch_id=$b")).exists()))
+    // base_v2's 8 keys and batch 4's 2 new ones
+    assert(store.fileIndex.rows == 10 && store.snapshot().size == 10)
+  }
+
+  test("the index stays within its row budget, evicts least recently used " +
+      "first and still answers for a file larger than the budget") {
+    val dir = java.nio.file.Paths.get(SparkEnv.scratchDir("index-unit"))
+    def file(name: String, bytes: Int) =
+      java.nio.file.Files.write(dir.resolve(name), Array.fill[Byte](bytes)(1))
+    val sizes = Map("a" -> 4, "b" -> 4, "c" -> 4, "big" -> 11)
+    val decoded = new AtomicInteger(0)
+    val index = new ParquetServingStore.SortedFileCache(10, { f =>
+      decoded.incrementAndGet()
+      val name = f.getFileName.toString
+      // shuffled input: the index must sort it
+      ParquetServingStore.SortedRows(scala.util.Random.shuffle(
+        (0 until sizes(name)).map(i => row(s"$name/$i", i, i * 0.5))).toArray)
+    })
+    val Seq(a, b, c, big) = Seq("a", "b", "c", "big").map(file(_, 1))
+    def keys(f: java.nio.file.Path, prefix: String) = {
+      val out = Seq.newBuilder[String]
+      index.rowsOf("d", f).foreachWithPrefix(prefix)(r => out += r.key)
+      out.result()
+    }
+    def names = index.files.map(java.nio.file.Paths.get(_).getFileName.toString)
+
+    assert(keys(a, "a/") == Seq("a/0", "a/1", "a/2", "a/3"))
+    assert(keys(b, "b/2") == Seq("b/2"))
+    assert(names == Seq("a", "b") && index.rows == 8 && decoded.get == 2)
+    assert(keys(a, "a/3") == Seq("a/3")) // a hit makes a the most recent
+    assert(decoded.get == 2 && names == Seq("b", "a"))
+    assert(keys(c, "") == Seq("c/0", "c/1", "c/2", "c/3"))
+    assert(names == Seq("a", "c") && index.rows == 8, "b was least recently used")
+    // larger than the whole budget: answered, not kept, nothing evicted
+    assert(keys(big, "big/1") == Seq("big/1", "big/10"))
+    assert(keys(big, "x").isEmpty)
+    assert(decoded.get == 5 && names == Seq("a", "c") && index.rows == 8)
+    // a file rewritten at the same path is a new entry
+    file("a", 2)
+    assert(keys(a, "a/0") == Seq("a/0") && decoded.get == 6)
+    assert(index.rows <= 10)
+    index.retainDirs(Set("elsewhere"))
+    assert(index.files.isEmpty && index.rows == 0)
+
+    // the parquet decoder on a real store file, with a budget below it
+    val storeDir = SparkEnv.scratchDir("index-big")
+    val stored = (0 until 40).map(i => row(s"misc/$i", i + 1, i * 0.25))
+    new ParquetServingStore(spark, storeDir).merge(0, stored)
+    val parts = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(storeDir))
+      try w.iterator.asScala.filter(_.getFileName.toString.startsWith("part-")).toList
+      finally w.close()
+    }
+    val small = new ParquetServingStore.SortedFileCache(2)
+    val got = Seq.newBuilder[CounterRow]
+    parts.foreach(f => small.rowsOf(storeDir, f).foreachWithPrefix("misc/1")(got += _))
+    assert(got.result().sortBy(_.key) == stored.filter(_.key.startsWith("misc/1")).sortBy(_.key))
+    assert(parts.nonEmpty && small.rows == 0)
   }
 }

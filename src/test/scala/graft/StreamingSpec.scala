@@ -28,9 +28,8 @@ class StreamingSpec extends SparkSpec {
 
   test("multi-granularity pipeline maintains all four calendar rollups at once") {
     import org.apache.spark.sql.functions._
-    val checkpoint = graft.SparkEnv.scratchDir("ckpt-multi")
     val store = new InMemoryServingStore
-    Serving.runMultiGranularityPipeline(spark, sf, store, checkpoint)
+    Serving.runMultiGranularityCube(spark, sf, store, graft.SparkEnv.scratchDir("ckpt-cube"))
     val streamed = store.snapshot().map(r => (r.key, r.nEvents, r.sumValue)).toSet
     // batch twin: the same four rollups computed directly
     val ev = Tables.events(spark, sf)
@@ -47,20 +46,8 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch)
     // all four granularities present
     Seq("hour", "day", "month", "year").foreach { g =>
-      assert(store.snapshot().exists(_.key.contains(s"/$g/")), s"missing $g keys")
+      assert(streamed.exists(_._1.contains(s"/$g/")), s"missing $g keys")
     }
-  }
-
-  test("single-state multi-granularity cube equals the four-query pipeline") {
-    val store4 = new InMemoryServingStore
-    Serving.runMultiGranularityPipeline(
-      spark, sf, store4, graft.SparkEnv.scratchDir("ckpt-multi4"))
-    val store1 = new InMemoryServingStore
-    Serving.runMultiGranularityCube(
-      spark, sf, store1, graft.SparkEnv.scratchDir("ckpt-cube"))
-    val a = store4.snapshot().map(r => (r.key, r.nEvents, r.sumValue)).toSet
-    val b = store1.snapshot().map(r => (r.key, r.nEvents, r.sumValue)).toSet
-    assert(a == b)
   }
 
   test("MemoryStream windowed agg equals batch agg on same input") {
