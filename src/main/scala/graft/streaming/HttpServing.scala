@@ -28,9 +28,20 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * partitioned parquet store that is a read on the request thread,
   * without a Spark job, of only the gran/pday partition files the
   * prefix can match, each binary-searched in the store's bounded index
-  * of key-sorted file rows (a file decodes once, on its first read):
-  * the reference's O(1)-per-key Redis read re-expressed as partition
+  * of key-sorted file rows (a file decodes once, in the writer when
+  * readers have been reading its partition, else on its first read).
+  * The file list is cached under the store's commit stamp, so a read
+  * between two writes reads one small file and then memory: the
+  * reference's O(1)-per-key Redis read re-expressed as partition
   * pruning plus a sorted-index probe.
+  *
+  * Responses go out with TCP_NODELAY: the JDK server writes the
+  * headers and the body as separate segments, and with Nagle's
+  * algorithm on the body can wait for the client's delayed ACK
+  * (~40 ms). [[start]] sets the JDK's `sun.net.httpserver.nodelay`
+  * property unless the JVM already sets it; the JDK reads it once, when
+  * the first server of the JVM is created, so a JVM that created one
+  * before keeps its earlier setting.
   *
   * A failed read answers 500 with `{"error": "internal error",
   * "request_id": n}` and logs the exception under the same id; the
@@ -38,6 +49,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   */
 object HttpServing {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private val NoDelay = "sun.net.httpserver.nodelay"
 
   private def jsonNum(d: Double): String =
     if (d.isNaN || d.isInfinite) "null" // JSON has no NaN/Infinity
@@ -72,6 +85,7 @@ object HttpServing {
     * port.
     */
   def start(store: ServingStore, port: Int = 0): (HttpServer, Int) = {
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     val requests = new java.util.concurrent.atomic.AtomicLong(0)
     server.createContext("/stats/", new HttpHandler {

@@ -39,8 +39,7 @@ final class RedisServingStore(host: String, port: Int) extends ServingStore {
       (it: Iterator[Row]) =>
         if (it.nonEmpty) {
           val c = new RespClient(h, p)
-          try c.pipelineHsets(it.map(r =>
-            ServingStore.CounterRow(r.getString(0), r.getLong(1), r.getDouble(2))))
+          try c.pipelineHsets(it.map(ServingStore.counterRow))
           finally c.close()
         }
     }

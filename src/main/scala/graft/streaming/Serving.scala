@@ -54,6 +54,14 @@ trait ServingStore {
 object ServingStore {
   case class CounterRow(key: String, nEvents: Long, sumValue: Double)
 
+  /** A keyed row (`key`, `n_events`, `sum_value`) as a counter. A null
+    * sum (every summed value in the group was null) reads as NaN, as
+    * the parquet store reads it back, and [[HttpServing]] renders it
+    * as JSON null.
+    */
+  def counterRow(r: Row): CounterRow =
+    CounterRow(r.getString(0), r.getLong(1), if (r.isNullAt(2)) Double.NaN else r.getDouble(2))
+
   /** Streaming aggregate → upsert semantics: the latest value per key
     * wins (aggregation state already holds the running total, so the
     * sink REPLACES — HSET, not HINCRBY; that is what makes replays
@@ -89,8 +97,7 @@ final class InMemoryServingStore extends ServingStore {
     keyed.select("key", "n_events", "sum_value").foreachPartition {
       (it: Iterator[Row]) =>
         val store = InMemoryServingStore.instance(id)
-        it.foreach(r => store.put(
-          ServingStore.CounterRow(r.getString(0), r.getLong(1), r.getDouble(2))))
+        it.foreach(r => store.put(ServingStore.counterRow(r)))
     }
     seenBatches.add(batchId)
   }
@@ -161,18 +168,38 @@ object InMemoryServingStore {
   * scheduling nor queues behind the writer's jobs. Each file is decoded
   * once into rows sorted by key and kept in a per-store LRU index
   * bounded to [[ParquetServingStore.IndexBudgetRows]] rows; a lookup
-  * then binary-searches the prefix in every admitted file, so a warm
-  * read costs the listing plus the matching rows, not the file sizes.
+  * then binary-searches the prefix in every admitted file.
   * Index entries are keyed by (path, size, mtime) and committed store
   * files are immutable (a replay or compaction writes new
   * `part-<uuid>` files into a recreated or new dir), so an entry can
-  * never answer for changed content; entries of dirs a read's listing
-  * no longer returns are dropped. [[lookup]] is the same read as a
+  * never answer for changed content; entries of dirs a listing no
+  * longer returns are dropped when it is taken.
+  *
+  * The listing itself is cached under a COMMIT STAMP, the root file
+  * `_stamp` holding a random token (a one-entry reduction of Delta
+  * Lake's log-of-files commit, Armbrust et al., VLDB 2020). Every
+  * write through this API replaces it once its content is committed:
+  * [[sinkBatch]] and [[merge]] after the Spark write, [[compact]]
+  * after its `_FOLDED` markers. [[lookupRows]] reads the stamp BEFORE
+  * anything else and re-lists only when the token differs from the
+  * one its cached listing was taken under (or there is no stamp), so
+  * the listing it serves is never older than any write that finished
+  * before the read started, and a warm read makes one file-system
+  * call, the stamp read, plus the matching rows. Before replacing the
+  * stamp, a writer decodes the new files in the partitions readers
+  * have been reading, and after it, re-lists for this instance's
+  * readers, so neither lands on a request. A writer that
+  * bypasses this API (a hand-deleted `_FOLDED` marker, a copied-in
+  * batch dir) is seen by [[lookupRows]] only after the next stamp;
+  * the relational readers ([[lookup]], [[latest]], [[snapshot]])
+  * always list directly. [[lookup]] is the same read as a
   * relational view (`PartitionFilters` in its plan, asserted by
   * ScaleSpec); ServingLookupSpec pins the two equal.
   */
 final class ParquetServingStore(spark: SparkSession, path: String) extends ServingStore {
   import ParquetServingStore.GRANS
+
+  private val root = Paths.get(path)
 
   /** key → (gran, pday) partition columns (see class doc). Unknown key
     * shapes land in gran=NONE/pday=ALL — stored fine, just unpruned.
@@ -197,7 +224,7 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
         .otherwise("ALL"))
   }
 
-  private def writeBatch(keyed: DataFrame, batchId: Long): Unit =
+  private def writeBatch(keyed: DataFrame, batchId: Long): Unit = {
     withPartitionCols(keyed)
       // co-locate each (gran, pday) dir on one task before the
       // partitioned write: without this every upstream task writes a
@@ -209,6 +236,40 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
       .repartition(col("gran"), col("pday"))
       .write.partitionBy("gran", "pday")
       .mode("overwrite").parquet(s"$path/batch_id=$batchId")
+    publish(root.resolve(s"batch_id=$batchId").toString, fileIndex.dirs)
+  }
+
+  /** Publish the committed dir `dir` to [[lookupRows]]. First decode
+    * into [[fileIndex]] its files in every `gran=`/`pday=` partition
+    * that holds an indexed file of `readDirs`, i.e. where readers have
+    * been reading; then replace `_stamp` with a fresh token (written
+    * aside, then renamed over it, so a reader sees the old token or the
+    * new one, never a partial file); then, if this instance has served
+    * reads, take the new listing. Neither the decode nor the re-list
+    * then falls on a request, and a store nobody reads pays for
+    * neither.
+    */
+  private def publish(dir: String, readDirs: Set[String]): Unit = {
+    import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
+    def partition(f: Path) = f.getParent.getParent.getFileName -> f.getParent.getFileName
+    val read = fileIndex.filesIn(readDirs).map(partition).toSet
+    try if (read.nonEmpty) storeFiles(dir).filter(f => read(partition(f.path)))
+      .foreach(f => fileIndex.rowsOf(f.dir, f.path, f.id))
+    finally {
+      val stamp = java.util.UUID.randomUUID.toString
+      val tmp = root.resolve(s"${ParquetServingStore.StampFile}.tmp-$stamp")
+      Files.writeString(tmp, stamp)
+      Files.move(tmp, root.resolve(ParquetServingStore.StampFile), ATOMIC_MOVE, REPLACE_EXISTING)
+      if (listed != null) relist(Some(stamp))
+    }
+  }
+
+  /** The current stamp token; None for a store without one (empty, or
+    * written by code older than the stamp).
+    */
+  private def readStamp(): Option[String] =
+    try Some(Files.readString(root.resolve(ParquetServingStore.StampFile)))
+    catch { case _: java.nio.file.NoSuchFileException => None }
 
   override def merge(batchId: Long, rows: Seq[ServingStore.CounterRow]): Unit = {
     import spark.implicits._
@@ -298,12 +359,10 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
       case e: Exception if ParquetServingStore.vanished(e) => false
     }
 
-  private def listRoot(prefix: String): Seq[String] = {
-    val root = Paths.get(path)
+  private def listRoot(prefix: String): Seq[String] =
     if (!Files.exists(root)) Seq.empty
     else ParquetServingStore.children(root, prefix)
       .filter(p => Files.exists(p.resolve("_SUCCESS"))).map(_.toString)
-  }
 
   /** Batch dirs that are COMMITTED (_SUCCESS marker — Spark's
     * job-commit protocol writes it last), non-empty (a zero-row
@@ -374,51 +433,80 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
     * then kept), latest batch winning per key and n=0 tombstones
     * dropped. Sorted by key.
     *
+    * The files come from the listing cached under the store's commit
+    * stamp (see the class doc): the stamp is read first, and the store
+    * is listed again only when the stamp changed or is missing.
+    * Writers replace the stamp after their commit, so the order
+    * stamp-read-then-list can only pair a token with a listing at
+    * least as new as the writes it stands for.
+    *
     * A compaction sweep or a batch replay can delete a dir between the
-    * listing and the read; the read then lists again, once.
+    * listing and the read; the read then lists again, once, whatever
+    * the stamp says.
     */
-  override def lookupRows(keyPrefix: String): Seq[ServingStore.CounterRow] =
-    try readPrefix(keyPrefix)
-    catch { case e: Exception if ParquetServingStore.vanished(e) => readPrefix(keyPrefix) }
+  override def lookupRows(keyPrefix: String): Seq[ServingStore.CounterRow] = {
+    val stamp = readStamp()
+    val cached = listed
+    val files =
+      if (stamp.isDefined && cached != null && cached.stamp == stamp) cached.files
+      else relist(stamp)
+    try readPrefix(keyPrefix, files)
+    catch {
+      case e: Exception if ParquetServingStore.vanished(e) =>
+        readPrefix(keyPrefix, relist(readStamp()))
+    }
+  }
 
   /** Sorted rows of the store files [[lookupRows]] has read. */
   private[graft] val fileIndex =
     new ParquetServingStore.SortedFileCache(ParquetServingStore.IndexBudgetRows)
 
-  private def readPrefix(keyPrefix: String): Seq[ServingStore.CounterRow] = {
-    val parts = ParquetServingStore.partitionsOf(keyPrefix)
+  /** The listing [[lookupRows]] last took, with the stamp read before it. */
+  @volatile private var listed: ParquetServingStore.Listing = _
+
+  /** List every file of the committed base and live batch dirs (base
+    * first, then batches in id order), cache it under `stamp`, and drop
+    * the index entries of dirs it no longer returns (folded, swept or
+    * superseded).
+    */
+  private def relist(stamp: Option[String]): Seq[ParquetServingStore.StoreFile] = {
     // batches are listed BEFORE the base, as in latestWhere: a compaction
     // between the two listings then yields its new base plus dominated
     // batch dirs (read identically), never an old base missing the
     // batches it just folded
-    val batches = committedBatchDirs.sortBy(batchIdOf)
-    val dirs = committedBaseDir.toSeq ++ batches
-    // a dir this listing no longer returns was folded, swept or superseded
-    fileIndex.retainDirs(dirs.toSet)
+    val batches = committedBatchDirs.sortBy(batchIdOf).map(storeFiles)
+    val files = committedBaseDir.toSeq.flatMap(storeFiles) ++ batches.flatten
+    fileIndex.retainDirs(files.map(_.dir).toSet)
+    listed = ParquetServingStore.Listing(stamp, files)
+    files
+  }
+
+  private def readPrefix(keyPrefix: String,
+      files: Seq[ParquetServingStore.StoreFile]): Seq[ServingStore.CounterRow] = {
+    val parts = ParquetServingStore.partitionsOf(keyPrefix)
     val latest = new java.util.HashMap[String, ServingStore.CounterRow]()
     // the base ranks below every batch and batches apply in id order, so
     // a plain overwrite leaves each key at its latest batch (max_by)
-    for (dir <- dirs; file <- partFiles(dir, parts))
-      fileIndex.rowsOf(dir, file).foreachWithPrefix(keyPrefix)(r => latest.put(r.key, r))
+    for (f <- files if parts.forall(_.admits(f)))
+      fileIndex.rowsOf(f.dir, f.path, f.id).foreachWithPrefix(keyPrefix)(r => latest.put(r.key, r))
     latest.values.asScala.filter(_.nEvents != 0).toSeq.sortBy(_.key)
   }
 
-  /** The `part-*.parquet` files of one batch or base dir inside the
-    * partitions `parts` admits (all of them when None).
+  /** The `part-*.parquet` files of one batch or base dir, with their
+    * partition values and attributes; none for a dir that vanishes
+    * during the walk (a sweep or replay racing the listing).
     */
-  private def partFiles(dir: String,
-      parts: Option[ParquetServingStore.Partitions]): Seq[Path] = {
-    import ParquetServingStore.children
-    val root = Paths.get(dir)
-    // listing (not probing) the dir makes a vanished one throw
-    val granDirs = children(root, "gran=")
-      .filter(g => parts.forall(g.getFileName.toString == "gran=" + _.gran))
-    for {
-      g <- granDirs
+  private def storeFiles(dir: String): Seq[ParquetServingStore.StoreFile] = {
+    import ParquetServingStore.{children, StoreFile, SortedFileCache}
+    def value(p: Path, key: String) = p.getFileName.toString.stripPrefix(key)
+    try for {
+      g <- children(Paths.get(dir), "gran=")
       d <- children(g, "pday=")
-      if parts.forall(_.admitsPday(d.getFileName.toString.stripPrefix("pday=")))
       f <- children(d, "part-") if f.getFileName.toString.endsWith(".parquet")
-    } yield f
+    } yield StoreFile(dir, value(g, "gran="),
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(value(d, "pday=")), f, SortedFileCache.FileId.of(f))
+    catch { case e: Exception if ParquetServingStore.vanished(e) => Seq.empty }
   }
 
   private def hasData: Boolean =
@@ -481,7 +569,12 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
     *    compact() sweeps previously-marked dirs, superseded bases,
     *    and dominated empty batch dirs — so a read racing the
     *    maintenance pass never hits a vanished file unless it spans
-    *    a full compaction cycle (and [[lookupRows]] then lists again).
+    *    a full compaction cycle (and [[lookupRows]] then lists again);
+    *  - the fold reaches [[lookupRows]] through the commit stamp,
+    *    replaced after the markers, once the new base's files are
+    *    indexed in every partition where the old base or a folded batch
+    *    had an indexed file (see `publish`); until then readers keep
+    *    serving the old base and the folded dirs, still on disk.
     *
     * Single-writer discipline (documented, not enforced): one
     * maintenance writer at a time, like every base+delta store
@@ -521,6 +614,7 @@ final class ParquetServingStore(spark: SparkSession, path: String) extends Servi
       .mode("overwrite").parquet(s"$path/base_v$nextV")
     toCompact.foreach(d => Files.createFile(
       Paths.get(d).resolve(ParquetServingStore.FoldedMarker)))
+    publish(root.resolve(s"base_v$nextV").toString, (oldBase.toSeq ++ toCompact).toSet)
   }
 
   /** The deferred-deletion sweep (see [[compact]]): remove batch dirs
@@ -564,14 +658,28 @@ object ParquetServingStore {
 
   private[streaming] val FoldedMarker = "_FOLDED"
 
+  /** The commit stamp's file name in the store root (see the class doc);
+    * the leading `_` hides it from Spark's and the store's listings.
+    */
+  private[graft] val StampFile = "_stamp"
+
   /** The partition dirs a key prefix can match: `gran=<gran>` and the
     * `pday=` values starting with `pdayPrefix` ("" admits every pday).
     */
   private[streaming] final case class Partitions(gran: String, pdayPrefix: String) {
-    def admitsPday(dirValue: String): Boolean =
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(dirValue).startsWith(pdayPrefix)
+    def admits(f: StoreFile): Boolean = f.gran == gran && f.pday.startsWith(pdayPrefix)
   }
+
+  /** One `part-*.parquet` file of a store dir: its partition values
+    * (`pday` unescaped) and the identity its index entry is keyed by.
+    */
+  private[streaming] final case class StoreFile(dir: String, gran: String, pday: String,
+      path: Path, id: SortedFileCache.FileId)
+
+  /** The store's files as listed after reading the stamp token `stamp`
+    * (None: the store had no stamp).
+    */
+  private[streaming] final case class Listing(stamp: Option[String], files: Seq[StoreFile])
 
   /** Prefix → partitions, the ONE pruning decision both [[lookup]] and
     * [[lookupRows]] use: the prefix's first granularity segment pins
@@ -672,13 +780,14 @@ object ParquetServingStore {
     // access-ordered: iteration starts at the least recently used entry
     private val entries = new java.util.LinkedHashMap[FileId, Entry](16, 0.75f, true)
     private var cachedRows = 0L
+    private val decodeCount = new java.util.concurrent.atomic.AtomicLong(0)
 
-    /** The sorted rows of `file`, a file inside the store dir `dir`. */
-    def rowsOf(dir: String, file: Path): SortedRows = {
-      val attrs = Files.readAttributes(file,
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      val id = FileId(file.toString, attrs.size, attrs.lastModifiedTime)
+    /** The sorted rows of `file`, a file inside the store dir `dir`
+      * whose identity `id` was taken when it was listed.
+      */
+    def rowsOf(dir: String, file: Path, id: FileId): SortedRows =
       Option(synchronized(entries.get(id))).map(_.rows).getOrElse {
+        decodeCount.incrementAndGet()
         val decoded = decode(file)
         if (decoded.size <= budgetRows) synchronized {
           Option(entries.put(id, Entry(dir, decoded))).foreach(old => cachedRows -= old.rows.size)
@@ -691,7 +800,6 @@ object ParquetServingStore {
         }
         decoded
       }
-    }
 
     /** Drop every entry whose dir is not in `live`. */
     def retainDirs(live: Set[String]): Unit = synchronized {
@@ -708,10 +816,25 @@ object ParquetServingStore {
     def files: Seq[String] = synchronized(entries.keySet.asScala.toList.map(_.path))
 
     def dirs: Set[String] = synchronized(entries.values.asScala.map(_.dir).toSet)
+
+    /** Cached files of the store dirs in `dirs`. */
+    def filesIn(dirs: Set[String]): Seq[Path] = synchronized(entries.asScala.collect {
+      case (id, e) if dirs(e.dir) => Paths.get(id.path)
+    }.toList)
+
+    /** Files decoded so far, kept or not. */
+    def decodes: Long = decodeCount.get
   }
 
-  private object SortedFileCache {
+  private[graft] object SortedFileCache {
     final case class FileId(path: String, size: Long, mtime: java.nio.file.attribute.FileTime)
+    object FileId {
+      def of(file: Path): FileId = {
+        val attrs = Files.readAttributes(file,
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        FileId(file.toString, attrs.size, attrs.lastModifiedTime)
+      }
+    }
     final case class Entry(dir: String, rows: SortedRows)
   }
 
@@ -760,8 +883,7 @@ object Serving {
     */
   def toCounterRows(batch: DataFrame): Seq[ServingStore.CounterRow] =
     keyedCounters(batch)
-      .collect().toSeq
-      .map(r => ServingStore.CounterRow(r.getString(0), r.getLong(1), r.getDouble(2)))
+      .collect().toSeq.map(ServingStore.counterRow)
 
   /** Streaming state-partition sizing: a stateful aggregation's state
     * store count is fixed by `spark.sql.shuffle.partitions` at first

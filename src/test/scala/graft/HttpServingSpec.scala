@@ -54,6 +54,28 @@ class HttpServingSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("a group whose summed values are all null is served with a null sum") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val events = Seq[(String, String, Option[Double])](
+      ("2024-01-01 10:05:00", "click", None), ("2024-01-01 10:40:00", "click", None),
+      ("2024-01-01 11:00:00", "click", Some(4.5)))
+      .toDF("ts", "event_type", "value").withColumn("ts", col("ts").cast("timestamp"))
+    val hourly = graft.streaming.Serving.hourlyCounters(events)
+    val sums = graft.streaming.Serving.toCounterRows(hourly).map(r => r.key -> r.sumValue).toMap
+    assert(sums("click/hour/2024-01-01-10").isNaN && sums("click/hour/2024-01-01-11") == 4.5)
+    val store = new InMemoryServingStore
+    store.sinkBatch(graft.streaming.Serving.keyedCounters(hourly), 0L)
+    val (server, port) = HttpServing.start(store)
+    try {
+      val listing = httpGet(port, "/stats/click/hour/")
+      assert(listing ==
+        """{"click/hour/2024-01-01-10": {"n_events": 2, "sum_value": null}, """ +
+          """"click/hour/2024-01-01-11": {"n_events": 1, "sum_value": 4.5}}""",
+        listing)
+    } finally server.stop(0)
+  }
+
   test("a failed read answers 500 with a request id and no exception text") {
     val store = new ServingStore {
       def merge(batchId: Long, rows: Seq[ServingStore.CounterRow]): Unit = ()

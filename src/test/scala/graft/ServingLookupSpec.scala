@@ -13,10 +13,14 @@ import graft.streaming.{ParquetServingStore, ServingStore}
   * and under a concurrent writer whose compaction sweeps delete dirs
   * while reads list them; and the store's index of sorted file rows
   * (`SortedFileCache`) on its own: warm across replays and compactions,
-  * rid of dirs they retire, and within its row budget.
+  * rid of dirs they retire, and within its row budget; and the commit
+  * stamp: a cached listing still answers another instance's writes, a
+  * store without a stamp lists on every read, and writers index their
+  * files where reads went before publishing them.
   */
 class ServingLookupSpec extends SparkSpec {
   import ServingStore.CounterRow
+  import ParquetServingStore.SortedFileCache.FileId
 
   private def row(k: String, n: Long, v: Double) = CounterRow(k, n, v)
 
@@ -206,6 +210,68 @@ class ServingLookupSpec extends SparkSpec {
     assert(store.fileIndex.rows == 10 && store.snapshot().size == 10)
   }
 
+  private def rows(b: Int) = Seq(row(s"click/hour/2024-01-05-1$b", 1 + b, 1.0),
+    row(s"click/day/2024-01-0${b + 1}", 2 + b, 2.0), row("view/month/2024-01", 3 + b, 0.5))
+
+  test("a store whose listing is cached answers a batch another instance merged") {
+    val dir = SparkEnv.scratchDir("lookup-stamp-shared")
+    val (reader, writer) = (new ParquetServingStore(spark, dir), new ParquetServingStore(spark, dir))
+    (0 until 3).foreach(b => writer.merge(b, rows(b)))
+    writer.compact(retainBatches = 1)
+    assert(assertSameAsLookup(reader) >= 5)
+    writer.merge(3, rows(3) :+ row("click/day/2024-01-02", 40, 4.0))
+    assert(reader.lookupRows("view/month/2024-01").map(_.nEvents) == Seq(6L))
+    assert(reader.lookupRows("click/day/2024-01-02").map(_.nEvents) == Seq(40L))
+    assert(assertSameAsLookup(reader) >= 5)
+    writer.compact(retainBatches = 0)
+    writer.merge(4, Seq(row("view/month/2024-01", 0, 0.0)))
+    assert(reader.lookupRows("view/").isEmpty, "the tombstone must hide the key")
+    assert(assertSameAsLookup(reader) >= 5)
+  }
+
+  test("a batch and a compaction index their files where reads went, so " +
+      "the next read decodes nothing") {
+    val dir = SparkEnv.scratchDir("lookup-warm-base")
+    val store = new ParquetServingStore(spark, dir)
+    (0 until 3).foreach(b => store.merge(b, rows(b)))
+    store.compact(retainBatches = 1)
+    assert(store.fileIndex.decodes == 0, "a store nobody reads decodes nothing")
+    val read = Seq("click/hour/2024-01-05", "view/month/")
+    def answers = read.map(store.lookupRows)
+    answers
+    store.merge(3, rows(3))
+    val merged = store.fileIndex.decodes
+    answers
+    assert(store.fileIndex.decodes == merged, "the first read after the batch decoded a file")
+    // folds base_v1 and batch 2 into base_v2; batch 3 stays live
+    store.compact(retainBatches = 1)
+    val base2 = java.nio.file.Paths.get(dir, "base_v2").toString
+    val warmed = store.fileIndex.filesIn(Set(base2))
+    assert(warmed.map(_.getParent.getParent.getFileName.toString).toSet ==
+      Set("gran=hour", "gran=month"), "only the partitions reads went to")
+    val decodes = store.fileIndex.decodes
+    import spark.implicits._
+    assert(answers == read.map(p => store.lookup(p).as[CounterRow].collect().toSeq.sortBy(_.key)))
+    assert(store.fileIndex.decodes == decodes, "the first read after the fold decoded a file")
+    assert(store.fileIndex.dirs == Set(base2, java.nio.file.Paths.get(dir, "batch_id=3").toString))
+  }
+
+  test("a store without a stamp, as older code wrote it, lists on every read") {
+    val dir = SparkEnv.scratchDir("lookup-unstamped")
+    val store = new ParquetServingStore(spark, dir)
+    val stamp = java.nio.file.Paths.get(dir, ParquetServingStore.StampFile)
+    (0 until 3).foreach(b => store.merge(b, rows(b)))
+    store.compact(retainBatches = 1)
+    java.nio.file.Files.delete(stamp)
+    assert(assertSameAsLookup(store) >= 5)
+    assert(assertSameAsLookup(store) >= 5)
+    // a batch an older writer commits leaves no stamp either
+    store.merge(3, rows(3) :+ row("click/day/2024-01-02", 40, 4.0))
+    java.nio.file.Files.delete(stamp)
+    assert(store.lookupRows("click/day/2024-01-02").map(_.nEvents) == Seq(40L))
+    assert(assertSameAsLookup(store) >= 5)
+  }
+
   test("the index stays within its row budget, evicts least recently used " +
       "first and still answers for a file larger than the budget") {
     val dir = java.nio.file.Paths.get(SparkEnv.scratchDir("index-unit"))
@@ -223,7 +289,7 @@ class ServingLookupSpec extends SparkSpec {
     val Seq(a, b, c, big) = Seq("a", "b", "c", "big").map(file(_, 1))
     def keys(f: java.nio.file.Path, prefix: String) = {
       val out = Seq.newBuilder[String]
-      index.rowsOf("d", f).foreachWithPrefix(prefix)(r => out += r.key)
+      index.rowsOf("d", f, FileId.of(f)).foreachWithPrefix(prefix)(r => out += r.key)
       out.result()
     }
     def names = index.files.map(java.nio.file.Paths.get(_).getFileName.toString)
@@ -257,7 +323,7 @@ class ServingLookupSpec extends SparkSpec {
     }
     val small = new ParquetServingStore.SortedFileCache(2)
     val got = Seq.newBuilder[CounterRow]
-    parts.foreach(f => small.rowsOf(storeDir, f).foreachWithPrefix("misc/1")(got += _))
+    parts.foreach(f => small.rowsOf(storeDir, f, FileId.of(f)).foreachWithPrefix("misc/1")(got += _))
     assert(got.result().sortBy(_.key) == stored.filter(_.key.startsWith("misc/1")).sortBy(_.key))
     assert(parts.nonEmpty && small.rows == 0)
   }
