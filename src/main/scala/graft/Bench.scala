@@ -35,7 +35,9 @@ object Bench {
       spark.range(1000).selectExpr("sum(id)").count()
       spark.read.parquet(s"$sfDir/region.parquet").count()
       warmCpu(spark)
-    } catch { case _: Throwable => }
+    } catch {
+      case e: Throwable => System.err.println(s"[bench] warm-up failed: $e")
+    }
     // The host's vCPUs stall unpredictably (same query: 0.7 s or 29 s
     // across runs — measured; see SparkEnv scaladoc), and the round-5
     // driver artifact showed 3-8x inflation on untouched queries under
@@ -64,10 +66,11 @@ object Bench {
         // Catalyst prune the query's own aggregates/projections/sorts
         // (measured: q_pricing_summary's decimal sums vanish entirely
         // under count — 0.5 s vs 1.7 s full), so it times a cheaper
-        // plan than the one the oracle checks (tools/BenchCmp.scala
-        // holds the measurement)
+        // plan than the one the oracle checks (measured by
+        // tools/BenchCmp.scala (removed; last in 672d67d))
         val ok = try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e"); false }
         name -> ((System.nanoTime() - t0) / 1e9, ok)
       }
     }

@@ -29,8 +29,9 @@ object SparkEnv {
     * One state store per partition, each paying open + delta-write +
     * commit PER MICRO-BATCH, so the count is sized to STATE VOLUME,
     * not CPU count: the declared pipelines hold 10³–10⁴ keys, and the
-    * round-11 floor profile (SCALING.md, tools/StreamFloorProf)
-    * measured the marginal batch at 8 → 2 partitions dropping
+    * round-11 floor profile (SCALING.md; tools/StreamFloorProf
+    * (removed; last in 672d67d)) measured the marginal batch at
+    * 8 → 2 partitions dropping
     * 693 → 445 ms (addBatch 493 → 285 ms — per-store commit overhead,
     * not data). At real state volumes raise SPARK_GRAFT_STATE_
     * PARTITIONS (or the test prop) — the stores shard linearly.
@@ -46,7 +47,8 @@ object SparkEnv {
     * provider selectable for measurement without a code change
     * (sys-prop `graft.test.stateProvider` / env
     * SPARK_GRAFT_STATE_PROVIDER = "rocksdb" — tools/StateAbProf's
-    * same-JVM A/B). transformWithState pipelines pass rocksdb=true
+    * same-JVM A/B (removed; last in 672d67d)). transformWithState
+    * pipelines pass rocksdb=true
     * unconditionally (Spark 4 requires that provider). The measured
     * default for the declared AGGREGATION pipelines stays HDFS-backed:
     * at their 10³–10⁴-key state sizes the in-heap map beats RocksDB's
@@ -62,7 +64,8 @@ object SparkEnv {
     if (wantRocks) s2.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Checkpoint-log writer (round-16 optimization, the largest
-    // per-micro-batch fixed cost found by StreamPhaseProf): every
+    // per-micro-batch fixed cost found by tools/StreamPhaseProf
+    // (removed; last in 672d67d)): every
     // offset-log / commit-log / file-source-log / state-delta /
     // RocksDB-upload write goes through CheckpointFileManager, and the
     // DEFAULT FileContext-based manager costs 33–130 ms PER FILE on
@@ -78,7 +81,8 @@ object SparkEnv {
     // dirs, non-local schemes delegate verbatim) does it in
     // 0.2–0.6 ms (tools/WalWriteProbe, all three measured
     // side-by-side). Same-JVM interleaved A/Bs over all 24
-    // stream-backed declared queries (tools/StateKnobAb): the r16
+    // stream-backed declared queries (tools/StateKnobAb; both tools
+    // removed; last in 672d67d): the r16
     // FileSystem-manager step measured ≈ −8 s over the class vs the
     // FileContext default, and the NIO fast path another ≈ −3…−5 s vs
     // the FileSystem manager (plans/r16/ckptnio_ab_{1,2}.txt), biggest
@@ -92,7 +96,7 @@ object SparkEnv {
     // the same batch id); a 100 TB HDFS deployment sets
     // SPARK_GRAFT_CKPT_FM=default to keep Spark's default manager —
     // where the native lib is present and the fork penalty gone, the
-    // managers are within noise anyway. The A/B hook below can still
+    // managers are within noise anyway. The conf hook below can still
     // override per run.
     sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
       "org.apache.spark.sql.execution.streaming.checkpointing." +
@@ -100,9 +104,10 @@ object SparkEnv {
       case "" | "default" => ()
       case cls => s2.conf.set("spark.sql.streaming.checkpointFileManagerClass", cls)
     }
-    // dev A/B hook (round-15, tools/StateKnobAb): extra session confs
-    // for same-JVM state-store knob measurement without a code change
-    // — the stateProvider-hook pattern. Production config is the
+    // test conf hook (round-15, written for tools/StateKnobAb (removed;
+    // last in 672d67d)): extra session confs for state-store knob
+    // measurement without a code change — the stateProvider-hook
+    // pattern. Production config is the
     // explicit block above; nothing sets this prop outside harnesses.
     // ALLOWLISTED to the streaming conf namespace (advisor r15 #1): a
     // stray/leaked sys prop must not be able to reconfigure arbitrary
@@ -202,7 +207,7 @@ object SparkEnv {
       // measured interactive-latency lever for sub-second inputs: each
       // AQE stage is a separate job with a materialization barrier, a
       // pure fixed cost when every shuffle is already KB-sized
-      // (tools/PhaseProf A/B, round 9).
+      // (tools/PhaseProf A/B, round 9; removed; last in 672d67d).
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.sql.session.timeZone", "UTC")
@@ -212,7 +217,8 @@ object SparkEnv {
       // ObjectHashAggregate falls back to SORT-based aggregation past
       // this many in-memory groups — default 128, which made the
       // 249-group q_sketch_percentiles pay a full 600k-row sort
-      // (measured 2.85 → 1.21 s; tools/SketchProf). 1024, not higher:
+      // (measured 2.85 → 1.21 s; tools/SketchProf (removed; last in
+      // 672d67d)). 1024, not higher:
       // the knob is session-global and also governs UNBOUNDED object
       // aggregates (collect_set bucket lists, exact percentile), whose
       // worst-case concurrent buffer memory it multiplies — the
@@ -227,7 +233,8 @@ object SparkEnv {
       // entries. A 218-query suite holds ~2k distinct codegen units, so
       // at the default every action recompiled every unit on every
       // pass — measured as the dominant share of the per-action floor
-      // (round-13 FloorProf + full-suite A/B: suite total 96.9 → 72.2 s
+      // (round-13 tools/FloorProf (removed; last in 672d67d) +
+      // full-suite A/B: suite total 96.9 → 72.2 s
       // at 5000 entries; q_brand_affinity 0.84 → 0.41 s). Static conf:
       // must be set before the first session. Memory cost is bounded
       // (compiled classes, ~10–100 KB each); a 100 TB driver serving a

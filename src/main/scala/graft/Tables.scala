@@ -23,7 +23,8 @@ object Tables {
   /** Per-(session, path) memo of the loaded relation. Every
     * `spark.read.parquet` pays driver-side file listing + footer
     * schema inference (~60 ms here) — measured at 0.1–0.3 s of pure
-    * fixed overhead per benchmark query (tools/PhaseProf, round 8),
+    * fixed overhead per benchmark query (tools/PhaseProf, round 8
+    * (removed; last in 672d67d)),
     * since a multi-table query re-lists every input. A real
     * deployment resolves tables through a catalog/metastore exactly
     * once; this memo is the library-local analog. Safe because the

@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   *
   *   CAST(sum(CAST(x AS DECIMAL(_, s))) AS DOUBLE)
   *
-  * but ~1.8× faster (tools/PricingProf: decimal 0.92 s vs scaled-long
-  * 0.50 s on the flagship at sf0.1), because Spark's decimal sums add
-  * Decimal objects while this form sums primitive longs inside
-  * whole-stage codegen.
+  * but ~1.8× faster (tools/PricingProf (removed; last in 672d67d):
+  * decimal 0.92 s vs scaled-long 0.50 s on the flagship at sf0.1),
+  * because Spark's decimal sums add Decimal objects while this form
+  * sums primitive longs inside whole-stage codegen.
   *
   * Mechanics: each row rounds ONCE to the oracle's decimal scale via
   * the literal decimal cast — `CAST(x AS DECIMAL(30, s)) · 10^s`, an

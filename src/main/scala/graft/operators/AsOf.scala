@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.plans.AsOfJoinPlan
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.graftshim.toExpression
 
 /** Public API for the native as-of join (SURVEY.md §2 C8, §4.3):
   *
@@ -26,10 +27,10 @@ object AsOf {
   def join(left: DataFrame, right: DataFrame,
       leftKeys: Seq[Column], rightKeys: Seq[Column],
       leftTime: Column, rightTime: Column): DataFrame = {
-    val lk = leftKeys.map(GraftSqlBridge.expr)
-    val rk = rightKeys.map(GraftSqlBridge.expr)
-    val lt = GraftSqlBridge.expr(leftTime)
-    val rt = GraftSqlBridge.expr(rightTime)
+    val lk = leftKeys.map(toExpression)
+    val rk = rightKeys.map(toExpression)
+    val lt = toExpression(leftTime)
+    val rt = toExpression(rightTime)
     // The merge exec compares right-side values with orderings built
     // from the LEFT types — mismatched types would read garbage, not
     // fail. Reject them here, where the user can see the schema.

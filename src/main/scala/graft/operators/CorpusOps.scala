@@ -38,7 +38,8 @@ object CorpusOps {
     * totals back on doc_id. The extra exchanges run over the
     * distinct-gram stream, which is why this beats recomputing the
     * scan+shingle subtree under both consumers (tools/ContainProf
-    * A/B/C at sf0.1, min of 3: recompute 1.18 s, persist 1.33 s,
+    * (removed; last in 672d67d) A/B/C at sf0.1, min of 3: recompute
+    * 1.18 s, persist 1.33 s,
     * single-pass 0.85 s). All stages linear, ceiling-guarded.
     * Reports ALL candidate pairs with their fraction — a τ cut is a
     * downstream filter, and the fractional rows are exactly what

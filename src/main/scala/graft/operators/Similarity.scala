@@ -799,7 +799,8 @@ object Similarity {
         val centsPath = graft.SparkEnv.scratchDir("ivf-exact-cents")
         // cell-partitioned like cachedIvfIndex: probes prune to the
         // probed cells' partition directories (dynamic partition
-        // pruning on the cell equi-join — PLAN_DIGEST q_ann_ivf)
+        // pruning on the cell equi-join — PLAN_DIGEST.md q_ann_ivf
+        // (removed; last in 672d67d))
         cells.write.mode("overwrite").partitionBy("cell").parquet(cellsPath)
         cents.write.mode("overwrite").parquet(centsPath)
         val v = (cellsPath, centsPath)

@@ -15,10 +15,10 @@ import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
   * coalesce(1) (no exchange at all; the final stage runs as one task)
   * when every leaf under the sort is a small materialized stage, else
   * repartition(1) (one single-partition exchange, upstream parallelism
-  * intact). Measured per query at sf0.1 (tools/SortCostProf, warm
-  * min): q_date_funcs 0.325 declared → 0.158 repartition(1) → 0.123
-  * coalesce(1) (no-sort floor 0.107); q_events_hourly 0.301 → 0.209 →
-  * 0.169 (floor 0.158).
+  * intact). Measured per query at sf0.1 (tools/SortCostProf (removed;
+  * last in 672d67d), warm min): q_date_funcs 0.325 declared → 0.158
+  * repartition(1) → 0.123 coalesce(1) (no-sort floor 0.107);
+  * q_events_hourly 0.301 → 0.209 → 0.169 (floor 0.158).
   *
   * Scale safety is the whole point of doing this at RUNTIME: the rule
   * is injected via `injectRuntimeOptimizerRule`, so it only runs
@@ -57,7 +57,7 @@ object SmallSortSinglePartition extends Rule[LogicalPlan] {
     case rp: Repartition if !rp.shuffle =>
       rp.copy(child = rewriteChain(rp.child))
     case s: Sort if s.global && s.child.stats.sizeInBytes <= maxBytes =>
-      // Two forms, in order of preference (SortCostProf A/B at sf0.1):
+      // Two forms, in order of preference (the SortCostProf A/B above):
       //  coalesce(1) + local sort — no new exchange, no extra AQE
       //    stage/job at all; the final stage runs as ONE task. Legal
       //    only when that one task provably does small work: every

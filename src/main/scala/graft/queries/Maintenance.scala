@@ -277,37 +277,6 @@ object Maintenance {
       .orderBy("check_name")
   }
 
-  /** The pre-round-16 five-leg shape (two separate orders scans) —
-    * kept private as the same-JVM A/B reference for the fusion above
-    * (tools/DqAuditAb); not a declared query path.
-    */
-  private[graft] def dqAuditUnfused(orders: DataFrame, lineitem: DataFrame,
-      customer: DataFrame): DataFrame = {
-    def check(name: String, n: DataFrame): DataFrame =
-      n.select(lit(name).as("check_name"), col("n_bad"))
-    val dupKeys = orders.groupBy("o_orderkey")
-      .agg(count(lit(1)).as("cnt")).filter(col("cnt") > 1)
-      .agg(coalesce(sum(col("cnt") - 1), lit(0L)).as("n_bad"))
-    val liOrphans = lineitem.select("l_orderkey")
-      .join(orders.select(col("o_orderkey")),
-        col("l_orderkey") === col("o_orderkey"), "left_anti")
-      .agg(count(lit(1)).as("n_bad"))
-    val nullKeys = orders.filter(col("o_custkey").isNull)
-      .agg(count(lit(1)).as("n_bad"))
-    val badPrice = lineitem.filter(col("l_extendedprice") <= 0)
-      .agg(count(lit(1)).as("n_bad"))
-    val orderOrphans = orders.select("o_custkey")
-      .join(customer.select(col("c_custkey")),
-        col("o_custkey") === col("c_custkey"), "left_anti")
-      .agg(count(lit(1)).as("n_bad"))
-    check("dup_order_keys", dupKeys)
-      .unionByName(check("lineitem_orphans", liOrphans))
-      .unionByName(check("null_custkeys", nullKeys))
-      .unionByName(check("nonpositive_price", badPrice))
-      .unionByName(check("order_orphans", orderOrphans))
-      .orderBy("check_name")
-  }
-
   /** Snapshot diff — corpus version drift between two releases: which
     * docs were added / removed / changed / unchanged, sliced by
     * language. v2 is a deterministic transform of the fixture corpus

@@ -217,7 +217,8 @@ object TpcH {
     * ONCE, filter, and join only the tiny qualifying set to
     * orders/customer (AQE broadcasts it). Measured: the two-scan
     * two-agg form spent 53% of its 1.43 s in the second fact pass
-    * (JobProf); this form scans and aggregates the fact once.
+    * (tools/JobProf (removed; last in 672d67d)); this form scans and
+    * aggregates the fact once.
     */
   val q18 = DeclaredQuery(
     "q_tpch_q18",

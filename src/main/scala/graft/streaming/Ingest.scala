@@ -50,15 +50,16 @@ object Ingest {
     val path = new java.io.File(s"$sfDir/$table.parquet")
     // ingestion batching knob (a real file-watch deployment always
     // sets one): bounds files admitted per micro-batch, which is also
-    // how tools/StreamAmortProf drives N>1 micro-batches over a
-    // chunked fixture to measure marginal batch cost. Unset (the
-    // default) = all available files in one AvailableNow batch.
+    // how tools/StreamAmortProf (removed; last in 672d67d) drove N>1
+    // micro-batches over a chunked fixture to measure marginal batch
+    // cost. Unset (the default) = all available files in one
+    // AvailableNow batch.
     // Session conf wins; the sys.prop is the DEV fallback for
     // harnesses whose streams run on an isolated newSession() that
-    // does not inherit the caller's runtime conf (StreamAmortProf's
-    // stateSession pattern). Conf-first so a harness sys.prop leaked
-    // by a failed finally-cleanup can never silently override an
-    // explicitly configured production stream (advisor r10).
+    // does not inherit the caller's runtime conf (the stateSession
+    // pattern). Conf-first so a harness sys.prop leaked by a failed
+    // finally-cleanup can never silently override an explicitly
+    // configured production stream (advisor r10).
     val maxFiles = spark.conf.getOption("spark.graft.stream.maxFilesPerTrigger")
       .orElse(sys.props.get("graft.stream.maxFilesPerTrigger"))
     def withKnob(r: org.apache.spark.sql.streaming.DataStreamReader) =

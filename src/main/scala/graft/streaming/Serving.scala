@@ -922,18 +922,16 @@ object Serving {
     // no-data batch's only work here is evicting state the
     // run-to-completion stream discards at stop anyway, at the full
     // per-batch fixed cost (state-store open/commit + two WAL fsyncs,
-    // ~0.4 s measured — tools/NoDataBatchProbe). Store contents are
+    // ~0.4 s measured — tools/NoDataBatchProbe (removed; last in
+    // 672d67d)). Store contents are
     // identical by construction. The skip is tied to THIS runner's
     // run-to-completion AvailableNow trigger; a CONTINUOUS deployment
     // reusing the pipeline wants prompt eviction between sparse data
     // batches back, so the production-named conf below re-enables it
-    // without a code change (advisor r15 #2 — previously the only
-    // override was a test-namespaced sys prop, which hid that this is
-    // the production knob; the prop remains the probe's dev hook).
+    // without a code change (advisor r15 #2).
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      (s2.conf.getOption("spark.graft.streaming.noDataBatches")
+      s2.conf.getOption("spark.graft.streaming.noDataBatches")
         .orElse(sys.env.get("SPARK_GRAFT_NO_DATA_BATCHES"))
-        .orElse(sys.props.get("graft.test.noDataBatches")))
         .contains("true").toString)
     val agg = hourlyCounters(Ingest.eventStream(s2, sfDir))
     val q = agg.writeStream

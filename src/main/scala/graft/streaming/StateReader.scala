@@ -44,8 +44,8 @@ object StateReader {
     * the SparkSession object (round-13 review: a session key pins
     * every closed session for the JVM lifetime, and the built
     * checkpoint is in fact session-independent — any session can read
-    * it; keying by the knobs also keeps tools/StateAbProf's provider
-    * A/B from reusing the other provider's store format).
+    * it; keying by the knobs also keeps a provider A/B from reusing the
+    * other provider's store format).
     */
   def dailyCounterCheckpoint(s: SparkSession, d: String): String = {
     val key = (d, SparkEnv.stateParts,

@@ -15,10 +15,13 @@ object GraftScratchBridge {
 
   /** Drain the async listener bus — what a measurement tool must call
     * before reading (or resetting) listener-fed counters instead of a
-    * fixed sleep (round-16, advisor r15 #3: StageCensus's 150 ms sleep
-    * could miss late-dispatched stage events or leak warm-pass events
-    * into the timed window). `listenerBus.waitUntilEmpty()` is
-    * `private[spark]`, hence the bridge.
+    * fixed sleep (round-16, advisor r15 #3: the 150 ms sleep in
+    * tools/StageCensus (removed; last in 672d67d) could miss
+    * late-dispatched stage events or leak warm-pass events into the
+    * timed window). The library itself never calls it; its caller is
+    * the benchmark harness, perfbench/src/main/scala/perfbench/Main.scala.
+    * `listenerBus.waitUntilEmpty()` is `private[spark]`, hence the
+    * bridge.
     */
   def waitListenerBusEmpty(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

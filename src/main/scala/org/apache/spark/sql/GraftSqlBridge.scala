@@ -13,10 +13,6 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Spark 4 moved `Column.expr` behind the classic converter. */
-  def expr(c: Column): catalyst.expressions.Expression =
-    classic.ExpressionUtils.expression(c)
-
   /** Surface the `private[sql]` joinAsOf so tests can exercise the
     * [[graft.plans.RewriteSparkAsOfJoin]] interception of Spark's own
     * AsOfJoin node (tolerance=null, allowExactMatches=true, backward —

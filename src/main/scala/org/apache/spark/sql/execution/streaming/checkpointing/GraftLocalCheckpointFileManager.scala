@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, Loc
 
 /** [[FileSystemBasedCheckpointFileManager]] with a java.nio fast path
   * for LOCAL checkpoint locations (round-16 optimization, measured by
-  * tools/WalWriteProbe).
+  * tools/WalWriteProbe (removed; last in 672d67d)).
   *
   * Why it exists: every streaming checkpoint write — offset log,
   * commit log, file-source metadata log, HDFS-state-store delta,
@@ -21,7 +21,7 @@ import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, Loc
   * pays a forked `chmod` for the permission call, and the checksummed
   * LocalFileSystem doubles that by writing a `.crc` sidecar per file:
   * ~9–11 ms per checkpoint write where raw java.nio needs ~0.05 ms
-  * (WalWriteProbe). Spark's atomic-write machinery
+  * (same probe). Spark's atomic-write machinery
   * ([[CheckpointFileManager.RenameBasedFSDataOutputStream]]) calls
   * back into the manager's `createTempFile`/`renameTempFile`, so
   * overriding exactly those two with NIO keeps the parent's

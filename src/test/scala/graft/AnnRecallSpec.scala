@@ -156,7 +156,7 @@ class AnnRecallSpec extends SparkSpec {
     lines += "deliberately deep in the exact-parity plateau."
     lines += ""
     java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/ANN_RECALL.md"),
+      java.nio.file.Paths.get("ANN_RECALL.md"),
       (lines.mkString("\n") + "\n").getBytes("UTF-8"))
   }
 }

@@ -59,17 +59,32 @@ class EdgeCaseSpec extends SparkSpec {
     assert(Dedup.shingles(tiny).count() == 2)
   }
 
+  /** q_pricing_summary's sums in the textbook form: each measure cast to
+    * a DECIMAL wide enough to hold it exactly, summed, cast to double. */
+  private def decimalForm(dir: String) =
+    Tables.lineitem(spark, dir)
+      .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(
+        sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
+        sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_base_price"),
+        sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
+          .cast("decimal(22,4)")).cast("double").as("sum_disc_price"),
+        sum((col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax")))
+          .cast("decimal(24,6)")).cast("double").as("sum_charge"),
+        count(lit(1)).as("count_order"))
+
   test("pricing summary's scaled-long sums are bit-identical to decimal sums") {
     // the shipped flagship sums exact scaled longs (hi/lo split for
     // the wide measures); this pins bit-parity with the textbook
-    // DECIMAL-sum form (tools/PricingProf.decimalForm) on two fixture
+    // DECIMAL-sum form (decimalForm above) on two fixture
     // scales — any drift in rounding, split, or reassembly fails here
     for (dir <- Seq(sf, "/root/testdata/sf0.01")) {
       val shipped = SparkEntry.queries("q_pricing_summary")(spark, dir)
         .select("l_returnflag", "l_linestatus", "sum_qty", "sum_base_price",
           "sum_disc_price", "sum_charge", "count_order")
         .collect()
-      val reference = graft.tools.PricingProf.decimalForm(spark, dir)
+      val reference = decimalForm(dir)
         .orderBy("l_returnflag", "l_linestatus")
         .select("l_returnflag", "l_linestatus", "sum_qty", "sum_base_price",
           "sum_disc_price", "sum_charge", "count_order")

@@ -11,20 +11,36 @@ class PlanSpec extends SparkSpec {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
-  /** Structural WindowExec count (round-7/8 advice: a "Window " string
-    * match is coupled to plan toString formatting). AQE wraps the plan
-    * and collect() stops at the wrapper boundary, so unwrap first.
+  /** AQE wraps the plan and collect() stops at the wrapper boundary,
+    * so structural assertions unwrap first.
     */
-  private def windowExecs(name: String)
-      : Seq[org.apache.spark.sql.execution.window.WindowExec] = {
-    val exec = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
-    val inner = exec match {
+  private def unwrapped(plan: org.apache.spark.sql.execution.SparkPlan) =
+    plan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.inputPlan
       case p => p
     }
-    inner.collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec => w
+
+  /** Structural WindowExec count (round-7/8 advice: a "Window " string
+    * match is coupled to plan toString formatting).
+    */
+  private def windowExecs(name: String)
+      : Seq[org.apache.spark.sql.execution.window.WindowExec] =
+    unwrapped(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+      .collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+
+  /** Hash keys (by column name) and partition count of every explicit
+    * `repartition(n, cols…)` exchange in the plan — structural, like
+    * [[windowExecs]].
+    */
+  private def repartitionsByNum(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[(Seq[String], Int)] = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    unwrapped(plan).collect {
+      case ShuffleExchangeExec(HashPartitioning(keys, n), _, REPARTITION_BY_NUM, _) =>
+        (keys.collect { case a: AttributeReference => a.name }, n)
     }
   }
 
@@ -63,12 +79,20 @@ class PlanSpec extends SparkSpec {
   }
 
   test("embedding near-dup is a block-pair equi-join: no BNLJ, no cartesian") {
-    val p = planOf("q_embed_near_dup")
+    val plan = SparkEntry.queries("q_embed_near_dup")(spark, sf)
+      .queryExecution.executedPlan
+    val p = plan.toString
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
     // the tile join is a plain equi-join on (blk_a, blk_b)
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
       p.contains("BroadcastHashJoin"), p)
+    // the probe side is spread over shuffleParts tasks by tile key:
+    // without it the quadratic tile evaluation ran on the scan's
+    // single partition (r16 census: 4 tasks for the whole query)
+    assert(repartitionsByNum(plan).contains(
+        (Seq("blk_a", "partner_a"), SparkEnv.shuffleParts(spark))),
+      s"no REPARTITION_BY_NUM exchange on (blk_a, partner_a):\n$p")
   }
 
   test("embedding near-dup block decomposition matches the quadratic form exactly") {
@@ -314,8 +338,9 @@ class PlanSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val assigned = emb.select(col("vec_id"), col("embedding"),
       Similarity.bucketCol("embedding", Similarity.hyperplanes(4)).as("grp"))
-    val p = Similarity.groupedDedupEdges(assigned, tau = 0.4, blocks = 4)
-      .queryExecution.executedPlan.toString
+    val plan = Similarity.groupedDedupEdges(assigned, tau = 0.4, blocks = 4)
+      .queryExecution.executedPlan
+    val p = plan.toString
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
     assert(p.contains("vec_dot(emb_a") || p.contains("vec_dot(emb_b"),
       s"dot threshold missing from the edge join condition:\n$p")
@@ -323,6 +348,11 @@ class PlanSpec extends SparkSpec {
     // broadcast at fixture size, shuffled at scale; either way the
     // keys are equi and the dot is residual
     assert(p.contains("HashJoin [grp") || p.contains("SortMergeJoin [grp"), p)
+    // the probe side is spread over shuffleParts tasks by the join's
+    // own (grp, tile) key, as in q_embed_near_dup
+    assert(repartitionsByNum(plan).contains(
+        (Seq("grp", "blk_a", "partner_a"), SparkEnv.shuffleParts(spark))),
+      s"no REPARTITION_BY_NUM exchange on (grp, blk_a, partner_a):\n$p")
   }
 
   test("sign_bucket is evaluated exactly once per row in the LSH semantic dedup plan") {
